@@ -10,7 +10,8 @@ ingest splits (see ``workloads.py``).
 
 Row counts follow ``sf`` like the testdata: lineitem = 6M x sf, orders =
 1.5M x sf, customer = 150k x sf, events = 1M x sf, with the text and
-vector corpora floored at 500 rows.
+vector corpora floored at 500 rows. ``datastats.py`` prints the
+statistics that compare these tables with the fixed testdata.
 """
 
 from __future__ import annotations
@@ -41,6 +42,9 @@ WORDS = (
 ).split()
 EMBED_DIM = 64
 N_LABELS = 10
+# label signal in the embeddings: same-label cosine ~ LABEL_WEIGHT**2,
+# which matches the testdata's weak clustering
+LABEL_WEIGHT = 0.04
 DUP_FRACTION = 0.05
 
 
@@ -55,10 +59,10 @@ def _money(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray
 
 
 def _documents(n: int, rng: np.random.Generator) -> pa.Table:
-    lens = rng.integers(10, 101, n)
+    lens = rng.integers(10, 100, n)
     texts = [" ".join(rng.choice(WORDS, k)) for k in lens]
-    # near-duplicates: a few docs repeat another doc's text plus one token,
-    # so the MinHash/LSH and exact-dedup queries have pairs to find
+    # near-duplicates, as in the testdata: a few docs repeat another doc's
+    # text plus one token, so the MinHash/LSH query has pairs to find
     for i in rng.choice(n, int(n * DUP_FRACTION), replace=False):
         j = int(rng.integers(0, n - 1))
         texts[i] = texts[j if j < i else j + 1] + " dup"
@@ -77,7 +81,7 @@ def _embeddings(n: int, rng: np.random.Generator) -> pa.Table:
     centers = rng.normal(size=(N_LABELS, EMBED_DIM))
     centers /= np.linalg.norm(centers, axis=1, keepdims=True)
     labels = rng.integers(0, N_LABELS, n)
-    x = 0.15 * centers[labels] + rng.normal(size=(n, EMBED_DIM)) / np.sqrt(EMBED_DIM)
+    x = LABEL_WEIGHT * centers[labels] + rng.normal(size=(n, EMBED_DIM)) / np.sqrt(EMBED_DIM)
     x = (x / np.linalg.norm(x, axis=1, keepdims=True)).astype(np.float32)
     vecs = pa.FixedSizeListArray.from_arrays(pa.array(x.ravel()), EMBED_DIM)
     return pa.table(

@@ -7,7 +7,7 @@ Spark session with its own warehouse, metastore, scratch and temp
 directories under ``.bench_build/perfbench/``, builds the workload's
 indexes, then runs whole passes of the workload: the first one always,
 each further one only if it should end within ``--seconds``. One pass
-takes longer than the window ``BENCHMARK.json`` sets, so each run
+takes more than half of the window ``BENCHMARK.json`` sets, so each run
 measures exactly the first pass after set-up. Every result is checked
 after the measured passes. The last stdout line is one JSON object with
 ``correct``, ``attempted``, ``failed`` and ``metrics``; the lines before
@@ -36,6 +36,9 @@ ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build", "perfbench")
 DATA_SF = 0.01
 DRIVER_MEM_MB = 2048
+# the workload's set-up (index builds) runs this many times, its tables
+# dropped in between; setup_s takes the median
+SETUP_REPEATS = 3
 
 # end-to-end metric -> unit, the JSON metrics of --trace 0 (BENCHMARK.json).
 # Wall times other than set-up are reported on the "#" lines only: pass_s
@@ -175,6 +178,14 @@ def start_spark():
     )
 
 
+def drop_tables(spark) -> None:
+    """Drop every table of the session's catalog, so that the next
+    set-up builds its indexes again."""
+    for t in spark.catalog.listTables():
+        if not t.isTemporary:
+            spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
+
+
 def stop_spark(spark) -> None:
     """Stop the session and the gateway JVM behind it. The JVM outlives
     ``spark.stop()`` and exits only when its stdin closes."""
@@ -248,10 +259,20 @@ def freshness(records: list) -> list[float]:
     return out
 
 
-def layer_metrics(tracer, traced_pass_s: list[float], untraced_pass_s: list[float]) -> dict:
+def trace_overhead(order: list[tuple[str, float]]) -> list[float]:
+    """For each traced pass between two untraced ones, in the run's
+    (phase, seconds) pass order: its time minus their mean."""
+    return [
+        t - (a + b) / 2
+        for (pa, a), (pt, t), (pb, b) in zip(order, order[1:], order[2:])
+        if pt == "traced" and pa == pb == "measured"
+    ]
+
+
+def layer_metrics(tracer, overhead: list[float]) -> dict:
     """Per-layer figures from the spans: layers seen in traced passes
-    are averaged per traced pass, set-up-only layers (session, index
-    builds) are totals over set-up."""
+    are averaged per traced pass; set-up layers are the session start
+    and the mean of the ``SETUP_REPEATS`` index set-ups."""
     from measure import self_times
 
     spans = tracer.spans
@@ -270,26 +291,24 @@ def layer_metrics(tracer, traced_pass_s: list[float], untraced_pass_s: list[floa
     in_setup = [s for s in spans if phase(s) == "setup"]
 
     def layer_total(name: str, field=None) -> float:
-        def val(s):
-            return s.seconds if field is None else s.counts.get(field, 0)
+        return sum(s.seconds if field is None else s.counts.get(field, 0)
+                   for s in in_pass if s.name == name) / n
 
-        hit = [s for s in in_pass if s.name == name]
-        if hit:
-            return sum(val(s) for s in hit) / n
-        return sum(val(s) for s in in_setup if s.name == name)
+    def setup_total(name: str) -> float:
+        return sum(s.seconds for s in in_setup if s.name == name)
 
     disk = [s for s in spans if s.name == "index.disk"]
     tests = sum(s.counts.get("tests", 0) for s in in_pass if s.name == "engine.testing.tests")
     test_jobs = sum(s.counts.get("jobs", 0) for s in in_pass if s.name == "engine.testing.test")
     m = {
-        "session.get_spark_s": layer_total("session.get_spark"),
-        "testdata.ensure_index_s": layer_total("testdata.ensure_index"),
+        "session.get_spark_s": setup_total("session.get_spark"),
+        "testdata.ensure_index_s": setup_total("testdata.ensure_index") / SETUP_REPEATS,
         "operators.build_s": layer_total("operators.build"),
         "operators.build_jobs": layer_total("operators.build", "jobs"),
         "catalyst.plan_s": layer_total("catalyst.plan"),
         "spark.exec_s": layer_total("spark.exec"),
         "spark.idle_s": layer_total("spark.exec", "idle_s"),
-        "index.build_s": layer_total("index.build"),
+        "index.build_s": setup_total("index.build") / SETUP_REPEATS,
         "index.append_s": layer_total("index.append"),
         "index.delete_s": layer_total("index.delete"),
         "index.fold_s": layer_total("index.fold"),
@@ -303,7 +322,7 @@ def layer_metrics(tracer, traced_pass_s: list[float], untraced_pass_s: list[floa
         "engine.testing.jobs_per_test": test_jobs / tests if tests else 0,
         "engine.table_format.files_written": layer_total("engine.runner.nodes", "files_written"),
         "engine.table_format.bytes_written": layer_total("engine.runner.nodes", "bytes_written"),
-        "trace.overhead_s": statistics.median(traced_pass_s) - statistics.median(untraced_pass_s),
+        "trace.overhead_s": statistics.median(overhead),
     }
     # all Spark work of a traced pass, whichever layer launched it
     for key in ("jobs", "stages", "tasks", "executor_run_s", "executor_cpu_s", "gc_s",
@@ -349,23 +368,29 @@ def run(args) -> tuple[dict, list[str]]:
     tracer = measure.Tracer(None, enabled=bool(args.trace))
     spark = None
     try:
-        t_setup = time.perf_counter()
         with tracer.span("setup"):
+            t0 = time.perf_counter()
             with tracer.span("session.get_spark"):
                 spark = start_spark()
                 spark.range(1).collect()
+            session_s = time.perf_counter() - t0
             tracer.spark = spark
-            setup_s = time.perf_counter() - t_setup
             workload = workloads.WORKLOADS[args.workload](spark, data_dir, run_dir, tracer, rng)
             measure.reset_peak_rss()  # oracle checks above are not the program's memory
-            t_setup = time.perf_counter()
-            workload.setup()
-            setup_s += time.perf_counter() - t_setup
+            builds = []
+            for k in range(SETUP_REPEATS):
+                if k:
+                    drop_tables(spark)
+                t0 = time.perf_counter()
+                workload.setup()
+                builds.append(time.perf_counter() - t0)
+        setup_s = session_s + statistics.median(builds)
         log(f"setup done: {setup_s:.1f} s")
         problems: list[str] = []
         records: list[Record] = []
 
         passes: dict[str, list[float]] = {"measured": [], "traced": []}
+        order: list[tuple[str, float]] = []
         cpu0, steal0, t0 = measure.tree_cpu_s(), measure.steal_s(), time.perf_counter()
         n_pass = 0
         while True:
@@ -375,6 +400,7 @@ def run(args) -> tuple[dict, list[str]]:
             tracer.enabled = phase == "traced"
             c0 = measure.tree_cpu_s()
             passes[phase].append(run_pass(workload, tracer, phase, records))
+            order.append((phase, passes[phase][-1]))
             n_pass += 1
             log(f"{phase} pass {passes[phase][-1]:.3f} s, cpu {measure.tree_cpu_s() - c0:.2f} s")
             # start another pass only if it should end within the window
@@ -436,6 +462,10 @@ def run(args) -> tuple[dict, list[str]]:
     )
     for name, value in e2e.items():
         lines.append(f"# {name} = {value:.4f} {'MB' if name == 'peak_rss_mb' else 's'}")
+    lines.append(
+        f"# setup_s parts: session start {session_s:.4f} s + median of workload set-ups "
+        + ", ".join(f"{b:.4f}" for b in builds) + " s"
+    )
     for label, s in (("read", reads), ("write", writes), ("freshness", fresh)):
         if s.get("n"):
             tail = (
@@ -449,8 +479,15 @@ def run(args) -> tuple[dict, list[str]]:
 
     result = {"correct": failed == 0, "attempted": attempted, "failed": failed}
     if args.trace:
-        lm = layer_metrics(tracer, passes["traced"], passes["measured"][1:])
+        overhead = trace_overhead(order)
+        lm = layer_metrics(tracer, overhead)
         lines.append(f"# traced passes: {lm['passes']}, untraced: {len(passes['measured'])}")
+        lines.append(
+            "# trace.overhead_s: median over traced passes of (traced - mean of the untraced"
+            f" passes either side): n={len(overhead)}, values "
+            + ", ".join(f"{v:.3f}" for v in overhead)
+            + (" (fewer than 3 samples: indicative only)" if len(overhead) < 3 else "")
+        )
         lines.append("# layer self time per traced pass (s), calls:")
         for name, (sec, calls) in sorted(lm["self_time"].items(), key=lambda kv: -kv[1][0]):
             lines.append(f"#   {name:<28} {sec:9.4f}  {calls}")

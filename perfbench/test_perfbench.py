@@ -90,6 +90,13 @@ def test_freshness_needs_a_correct_serve_after_a_good_append():
     assert run.freshness(records) == [3.0]
 
 
+def test_trace_overhead_pairs_each_traced_pass_with_its_neighbours():
+    order = [("measured", 9.0), ("measured", 4.0), ("traced", 5.0), ("measured", 2.0),
+             ("traced", 3.5), ("measured", 3.0)]
+    assert run.trace_overhead(order) == [2.0, 1.0]
+    assert run.trace_overhead([("measured", 9.0), ("traced", 5.0)]) == []
+
+
 def test_metric_names_match_benchmark_json():
     b = _benchmark_json()
     assert [w["name"] for w in b["workloads"]] == list(WORKLOADS)

@@ -93,19 +93,25 @@ def compare(got, expected) -> str | None:
 
 def oracle_rows(data_dir: str, sql: str):
     """Canonical rows of a DuckDB oracle query over ``data_dir``, cached
-    next to the data: both are fixed, and some oracles take seconds."""
+    next to the data: both are fixed, and some oracles take seconds. The
+    cache key covers the SQL, the DuckDB version and the source of the
+    harness that normalizes the rows, so a checkout with another
+    normalization never reads rows normalized by this one."""
     import hashlib
     import pickle
 
-    from oracle_harness import duckdb_conn
+    import duckdb
+    import oracle_harness
 
-    path = os.path.join(
-        data_dir + ".oracles", hashlib.sha256(sql.encode()).hexdigest()[:20] + ".pkl"
-    )
+    key = hashlib.sha256(sql.encode())
+    key.update(duckdb.__version__.encode())
+    with open(oracle_harness.__file__, "rb") as f:
+        key.update(f.read())
+    path = os.path.join(data_dir + ".oracles", key.hexdigest()[:20] + ".pkl")
     if os.path.exists(path):
         with open(path, "rb") as f:
             return pickle.load(f)
-    con = duckdb_conn(data_dir)
+    con = oracle_harness.duckdb_conn(data_dir)
     try:
         rows = _rows(con.execute(sql).fetch_arrow_table())
     finally:
