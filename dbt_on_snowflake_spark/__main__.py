@@ -1255,29 +1255,33 @@ def main(argv: list[str] | None = None) -> int:
             current = spark.catalog.currentDatabase()
 
             def _list_families() -> list[str]:
+                from dbt_on_snowflake_spark.engine.catalog import (
+                    list_databases,
+                    list_tables,
+                )
+
                 out = []
-                for db in spark.catalog.listDatabases():
-                    for t in spark.catalog.listTables(db.name):
-                        # listTables returns session TEMP VIEWS for
+                for db in list_databases(spark):
+                    for t in list_tables(spark, db):
+                        # the listing returns session TEMP VIEWS for
                         # every database (database=None, once per db) —
                         # a same-prefixed view would enter the sweep as
                         # an unresolvable 'db.view' entry (r13 review
                         # pass 2, finding 3)
-                        if t.isTemporary or t.database != db.name:
+                        if t.is_temporary or t.database != db:
                             continue
                         if not t.name.startswith(
                             ("pq_codes_", "ann_assignments_")
                         ):
                             continue
                         out.append(
-                            t.name if db.name == current
-                            else f"{db.name}.{t.name}"
+                            t.name if db == current else f"{db}.{t.name}"
                         )
                 return sorted(out)
 
             # the pre-ensure listing only informs filter relevance —
-            # skip the (Spark-job-scheduling) catalog enumeration on
-            # unfiltered sweeps, where _kept is constant-True
+            # skip the catalog enumeration on unfiltered sweeps, where
+            # _kept is constant-True
             pre_listed = (
                 _list_families()
                 if sel_pats is not None or exc_pats

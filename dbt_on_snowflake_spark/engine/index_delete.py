@@ -875,14 +875,19 @@ def fold_tombstone_families(
     skipped, never allowed to abort the rest of the maintenance sweep,
     and skipping is always SAFE: its tombstones stay in place and its
     serves stay gated."""
+    from dbt_on_snowflake_spark.engine.catalog import (
+        list_databases,
+        list_tables,
+    )
+
     done: list[tuple[str, int, int]] = []
     skipped: list[tuple[str, str]] = []
     current = spark.catalog.currentDatabase()
-    for db in sorted(d.name for d in spark.catalog.listDatabases()):
-        for t in spark.catalog.listTables(db):
-            if t.isTemporary or "_tombstones_" not in t.name:
+    for db in sorted(list_databases(spark)):
+        for t in list_tables(spark, db):
+            if t.is_temporary or "_tombstones_" not in t.name:
                 continue
-            if t.tableType not in ("MANAGED", "EXTERNAL"):
+            if t.table_type not in ("MANAGED", "EXTERNAL"):
                 continue
             qual = t.name if db == current else f"{db}.{t.name}"
             try:

@@ -156,6 +156,7 @@ def _swap_rewrite(
     file counts). Returns ``(files_before, files_after)``; ``None``
     when skipped (already compact) or aborted (an append raced the
     rewrite)."""
+    from dbt_on_snowflake_spark.engine.catalog import partition_columns
     from dbt_on_snowflake_spark.engine.fs import (
         _file_entries,
         fs_count_files,
@@ -193,7 +194,7 @@ def _swap_rewrite(
     for parent in {posixpath.dirname(loc), db_loc}:
         fs_delete(spark, posixpath.join(parent, tmp_base))
 
-    parts = [c.name for c in spark.catalog.listColumns(name) if c.isPartition]
+    parts = partition_columns(spark, name)
     # ONE traversal, two views (r12 review passes 6/7): the RACE guard
     # (snapshot/recheck equality) covers committed AND staged files —
     # an in-flight staged write must be visible or a batch committing
@@ -517,6 +518,7 @@ def reclaim_abandoned_staging(
     ``(reclaimed, skipped)``."""
     import time
 
+    from dbt_on_snowflake_spark.engine.catalog import list_databases
     from dbt_on_snowflake_spark.engine.fs import (
         _file_entries,
         fs_delete,
@@ -546,7 +548,7 @@ def reclaim_abandoned_staging(
     # covered (r12 review passes 10/11)
     roots: list[tuple[str, bool]] = [(wh, True)]  # (path, is_wh_root)
     try:
-        db_names = sorted(d.name for d in spark.catalog.listDatabases())
+        db_names = sorted(list_databases(spark))
     except Exception as exc:  # noqa: BLE001 — catalog hiccup:
         skipped.append(("<catalog>", str(exc)))  # wh root still swept
         db_names = []
@@ -644,10 +646,16 @@ def compact_index_tables(
     # database gets the same maintenance, with its tmp staged in its
     # OWN namespace (compact_index_table qualifies it). Names report
     # bare in the current database, db-qualified elsewhere.
+    from dbt_on_snowflake_spark.engine.catalog import (
+        list_databases,
+        list_tables,
+        partition_columns,
+    )
+
     current = spark.catalog.currentDatabase()
-    for db in sorted(d.name for d in spark.catalog.listDatabases()):
-        for t in spark.catalog.listTables(db):
-            if t.isTemporary:
+    for db in sorted(list_databases(spark)):
+        for t in list_tables(spark, db):
+            if t.is_temporary:
                 continue
             if "_tombstones_" in t.name:
                 # tombstone tables (engine.index_delete) carry a
@@ -666,10 +674,7 @@ def compact_index_tables(
                     # rebuild
                     try:
                         spark.sql(f"ALTER TABLE {qual} RENAME TO {owner}")
-                        if any(
-                            c.isPartition
-                            for c in spark.catalog.listColumns(owner)
-                        ):
+                        if partition_columns(spark, owner):
                             spark.sql(f"MSCK REPAIR TABLE {owner}")
                         spark.catalog.refreshTable(owner)
                         resumed.append(owner)
@@ -677,12 +682,12 @@ def compact_index_tables(
                         skipped.append((qual, str(exc)))
                 continue
             try:
-                if t.tableType == "EXTERNAL":
+                if t.table_type == "EXTERNAL":
                     if not _under_warehouse(
                         spark, table_location(spark, qual)
                     ):
                         continue
-                elif t.tableType != "MANAGED":
+                elif t.table_type != "MANAGED":
                     continue
                 r = compact_index_table(spark, qual)
             except Exception as exc:  # noqa: BLE001 — sweep must survive

@@ -12,10 +12,20 @@ test (dbt/tests/generic/test_is_positive_amount.sql:1-7):
 - is_positive_amount         (custom: fails on col IS NOT NULL AND col<=0)
 
 The universal convention: a test is a query returning FAILING rows;
-pass = zero rows. Each builtin returns a failures DataFrame; the runner
-counts it (one Spark action per test — the count aggregates map-side, so
-a test costs one scan even at 100 TB, and column pruning means it scans
-one column).
+pass = zero rows. Each builtin returns a failures DataFrame.
+
+The runner evaluates the ROW-LEVEL builtins (not_null, accepted_range,
+expression_is_true, is_positive_amount — a row fails on its own, no
+grouping or join) of one relation together: each becomes one
+``count(CASE WHEN <failure predicate> THEN 1 END)`` column of a single
+aggregate, so the relation costs one scan and one Spark action however
+many such tests it declares. On small relations a test is almost all
+per-job overhead, which fusion removes; on large ones the aggregate is
+map-side and column-pruned, so the scan reads only the tested columns
+once. ``unique``, ``relationships``, SQL generic tests, custom tests and
+tests that store or limit their failing rows run one action each, as
+does every test of a relation whose fused aggregate raises (so each
+still gets its own status and error).
 """
 
 from __future__ import annotations
@@ -25,14 +35,56 @@ import time
 from dataclasses import dataclass
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TestFn = Callable[..., DataFrame]
 
 
+# Row-level failure predicates: a row fails its test when the predicate
+# is TRUE. Each DataFrame builtin below filters on its predicate, and the
+# fused runner counts the same predicate inside one aggregate, so the two
+# paths cannot drift apart.
+
+
+def _not_null_failing(column: str) -> Column:
+    return F.col(column).isNull()
+
+
+def _accepted_range_failing(
+    column: str,
+    min_value: Any = None,
+    max_value: Any = None,
+    inclusive: bool = True,
+) -> Column:
+    c = F.col(column)
+    bad = F.lit(False)
+    if min_value is not None:
+        bad = bad | ((c < min_value) if inclusive else (c <= min_value))
+    if max_value is not None:
+        bad = bad | ((c > max_value) if inclusive else (c >= max_value))
+    return c.isNotNull() & bad
+
+
+def _expression_is_true_failing(expression: str) -> Column:
+    return ~F.expr(expression)
+
+
+def _is_positive_amount_failing(column: str) -> Column:
+    c = F.col(column).cast("double")
+    return c.isNotNull() & (c <= 0)
+
+
+ROW_PREDICATES: dict[str, Callable[..., Column]] = {
+    "not_null": _not_null_failing,
+    "accepted_range": _accepted_range_failing,
+    "expression_is_true": _expression_is_true_failing,
+    "is_positive_amount": _is_positive_amount_failing,
+}
+
+
 def not_null(df: DataFrame, column: str) -> DataFrame:
-    return df.filter(F.col(column).isNull())
+    return df.filter(_not_null_failing(column))
 
 
 def unique(df: DataFrame, column: str) -> DataFrame:
@@ -60,24 +112,13 @@ def accepted_range(
     max_value: Any = None,
     inclusive: bool = True,
 ) -> DataFrame:
-    c = F.col(column)
-    if inclusive:
-        bad = F.lit(False)
-        if min_value is not None:
-            bad = bad | (c < min_value)
-        if max_value is not None:
-            bad = bad | (c > max_value)
-    else:
-        bad = F.lit(False)
-        if min_value is not None:
-            bad = bad | (c <= min_value)
-        if max_value is not None:
-            bad = bad | (c >= max_value)
-    return df.filter(c.isNotNull() & bad)
+    return df.filter(
+        _accepted_range_failing(column, min_value, max_value, inclusive)
+    )
 
 
 def expression_is_true(df: DataFrame, expression: str) -> DataFrame:
-    return df.filter(~F.expr(expression))
+    return df.filter(_expression_is_true_failing(expression))
 
 
 def is_positive_amount(df: DataFrame, column: str) -> DataFrame:
@@ -86,8 +127,7 @@ def is_positive_amount(df: DataFrame, column: str) -> DataFrame:
     ``col IS NOT NULL AND col <= 0``. Stringly-typed numeric columns
     (e.g. city_population VARCHAR) rely on implicit cast — we cast
     explicitly for deterministic semantics (SURVEY §7.4)."""
-    c = F.col(column).cast("double")
-    return df.filter(c.isNotNull() & (c <= 0))
+    return df.filter(_is_positive_amount_failing(column))
 
 
 BUILTIN_TESTS: dict[str, TestFn] = {
@@ -161,10 +201,27 @@ class TestResult:
     column: str | None
     status: str  # pass | warn | fail | error
     failures: int | None
+    # wall time of the test's own action; a test counted in its
+    # relation's fused aggregate reports an even share of that
+    # aggregate's time, so per-relation sums stay right
     seconds: float
     error: str | None = None
     severity: str = "error"
     stored_relation: str | None = None  # where failing rows were persisted
+
+
+@dataclass
+class _Planned:
+    """One declared test, resolved: ``call`` builds its failures
+    DataFrame for the one-at-a-time path; ``predicate`` is set when the
+    test is counted in its relation's fused aggregate instead."""
+
+    name: str
+    column: str | None
+    call: Callable[[], DataFrame]
+    config: TestConfig
+    stored_suffix: str = ""
+    predicate: Column | None = None
 
 
 class TestRunner:
@@ -258,13 +315,9 @@ class TestRunner:
         """Execute every test declared in sources.yml (column-level and
         table-level), resolving `to:` references against other sources."""
         for (group, tname), src in project.sources.items():
-            relation = runner.resolve_source(group, tname)
-            df = self.spark.table(relation)
-            for column, tests in src.columns.items():
-                for t in tests:
-                    self._dispatch(df, relation, column, t, project, runner)
-            for t in src.tests:
-                self._dispatch(df, relation, None, t, project, runner)
+            self._run_relation(
+                runner.resolve_source(group, tname), src, project, runner
+            )
         return self.results
 
     def run_model_tests(
@@ -286,16 +339,90 @@ class TestRunner:
         for name, spec in project.model_tests.items():
             if only is not None and name not in only:
                 continue
-            relation = runner.resolve_ref(name)
-            df = self.spark.table(relation)
-            for column, tests in spec.columns.items():
-                for t in tests:
-                    self._dispatch(df, relation, column, t, project, runner)
-            for t in spec.tests:
-                self._dispatch(df, relation, None, t, project, runner)
+            self._run_relation(runner.resolve_ref(name), spec, project, runner)
         return self.results[before:]
 
+    def _run_relation(self, relation, spec, project, runner) -> None:
+        """Run the tests ``spec`` declares on ``relation``: column-level,
+        then table-level, results in declaration order. A declaration
+        error raises after the tests declared before it have run, as
+        one-at-a-time dispatch would."""
+        df = self.spark.table(relation)
+        declared = [
+            (column, t) for column, tests in spec.columns.items() for t in tests
+        ] + [(None, t) for t in spec.tests]
+        planned, error = [], None
+        for column, t in declared:
+            try:
+                planned.append(
+                    self._plan(df, relation, column, t, project, runner)
+                )
+            except Exception as e:  # noqa: BLE001 — re-raised below
+                error = e
+                break
+        self._execute(df, relation, planned, runner)
+        if error is not None:
+            raise error
+
     def _dispatch(self, df, relation, column, t, project, runner) -> None:
+        """Run one declared test."""
+        self._execute(
+            df, relation, [self._plan(df, relation, column, t, project, runner)],
+            runner,
+        )
+
+    def _execute(self, df, relation, planned: list[_Planned], runner) -> None:
+        """Count every fusable test of one relation in ONE aggregate —
+        one ``count(CASE WHEN <failure predicate> THEN 1 END)`` column per
+        test, so the relation costs one scan and one action — and run
+        the rest one at a time. If the aggregate raises (a missing
+        column, a cast that fails at run time), its tests rerun one at
+        a time, so each gets the status, count and error it would get
+        alone. A fused test's ``seconds`` is an even share of the
+        aggregate's time: per-relation sums stay right."""
+        fused = [p for p in planned if p.predicate is not None]
+        counts: dict[int, int] = {}
+        t0 = time.perf_counter()
+        if fused:
+            try:
+                row = df.agg(
+                    *[
+                        F.count(F.when(p.predicate, 1)).alias(f"t{i}")
+                        for i, p in enumerate(fused)
+                    ]
+                ).collect()[0]
+                counts = {id(p): n for p, n in zip(fused, row)}
+            except Exception:  # noqa: BLE001 — rerun one at a time below
+                pass
+        share = round((time.perf_counter() - t0) / max(len(fused), 1), 3)
+        for p in planned:
+            if id(p) in counts:
+                self._record_counted(p, relation, counts[id(p)], share)
+            else:
+                self._run_one(
+                    p.name, relation, p.column, p.call, p.config, runner,
+                    stored_suffix=p.stored_suffix,
+                )
+
+    def _record_counted(
+        self, p: _Planned, relation: str, n: int, seconds: float
+    ) -> None:
+        try:
+            res = TestResult(
+                p.name, relation, p.column, p.config.status_for(n), n,
+                seconds, severity=p.config.severity,
+            )
+        except Exception as e:  # noqa: BLE001 — bad threshold, as _run_one
+            res = TestResult(
+                p.name, relation, p.column, "error", None, seconds,
+                str(e)[:500], severity=p.config.severity,
+            )
+        self.results.append(res)
+
+    def _plan(self, df, relation, column, t, project, runner) -> _Planned:
+        """Resolve one declaration into its failures-DataFrame thunk and,
+        for a row-level builtin that needs no failing rows stored or
+        limited, its failure predicate. Configuration errors raise."""
         if isinstance(t, str):
             t = {t: {}}
         (test_name, kwargs), = t.items()
@@ -367,12 +494,10 @@ class TestRunner:
                 body, runner.resolve_ref, runner.resolve_source,
                 variables=runner.vars,
             )
-            self._run_one(
-                test_name, relation, column,
-                lambda: self.spark.sql(rendered), config, runner,
-                stored_suffix=stored_suffix,
+            return _Planned(
+                test_name, column, lambda: self.spark.sql(rendered), config,
+                stored_suffix,
             )
-            return
         fn = self.tests[test_name]
         import inspect
 
@@ -417,7 +542,17 @@ class TestRunner:
             # expression-style tests declared under a column still only
             # take the expression (dbt_utils.expression_is_true shape)
             call = lambda: fn(df, **kwargs)  # noqa: E731
-        self._run_one(
-            test_name, relation, column, call, config, runner,
-            stored_suffix=stored_suffix,
-        )
+        planned = _Planned(test_name, column, call, config, stored_suffix)
+        if (
+            fn is BUILTIN_TESTS.get(test_name)
+            and test_name in ROW_PREDICATES
+            and not config.store_failures
+            and config.limit is None
+        ):
+            pred = ROW_PREDICATES[test_name]
+            args = (column,) if column is not None and takes_column else ()
+            try:
+                planned.predicate = pred(*args, **kwargs)
+            except Exception:  # noqa: BLE001 — the per-test call
+                pass  # reproduces the error with its own message
+        return planned

@@ -12,6 +12,7 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -71,6 +72,22 @@ def final_plan(df: DataFrame) -> str:
     are only visible after the plan is finalized by running it."""
     df.collect()
     return explain_str(df)
+
+
+def scan_counts(df: DataFrame) -> Counter[str]:
+    """Scan nodes per table (bare name, database dropped) in the EXECUTED
+    plan tree. Runs the query, then reads the physical plan that ran —
+    with AQE, the final plan it settled on. The tree prints one line per
+    node, so a table read once counts once (the formatted explain prints
+    every operator twice), and a reused exchange does not count again."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return Counter(
+        m.group(1).rsplit(".", 1)[-1].strip("`")
+        for m in re.finditer(r"\bFileScan \w+ ([^\s\[]+)\[", plan.toString())
+    )
 
 
 def broadcast_hints(df: DataFrame) -> int:

@@ -305,8 +305,9 @@ def ensure_index_tables(
     builds all write mode("overwrite"), so a partial rebuild replaces
     the survivors. GC of superseded-fingerprint siblings and the build
     itself run under a dedicated job group so bench stage counts show
-    the serve path only (catalog.listTables schedules real Spark
-    jobs)."""
+    the serve path only (the build schedules real Spark jobs; the GC's
+    catalog listing goes through ``engine.catalog`` and schedules
+    none)."""
     if all(spark.catalog.tableExists(t) for t in tables):
         return
     sc = spark.sparkContext
@@ -391,6 +392,10 @@ def gc_superseded_index_tables(
     # scheme+slash normalized ('file:///x' == 'file:/x' == '/x') and
     # reclaim records are deduped on the normalized path, so a catalog
     # drop plus its leftover-dir delete is ONE record.
+    from dbt_on_snowflake_spark.engine.catalog import (
+        list_databases,
+        list_tables,
+    )
     from dbt_on_snowflake_spark.engine.index_maintenance import (
         _strip_scheme,
         _under_warehouse,
@@ -408,10 +413,10 @@ def gc_superseded_index_tables(
     wh_conf = spark.conf.get("spark.sql.warehouse.dir")
     wh_norm = _norm(wh_conf)
     roots: dict[str, str] = {wh_norm: wh_conf}
-    for db in sorted(d.name for d in spark.catalog.listDatabases()):
+    for db in sorted(list_databases(spark)):
         try:
             loc = _database_location(spark, f"`{db}`")
-            tables = list(spark.catalog.listTables(db))
+            tables = list_tables(spark, db)
         except Exception:  # noqa: BLE001 — unknown registrations:
             sweep_ok = False  # reclaim nothing on disk this run
             continue
@@ -419,16 +424,16 @@ def gc_superseded_index_tables(
         if loc_norm == wh_norm or loc_norm.startswith(wh_norm + "/"):
             roots.setdefault(loc_norm, loc)
         for t in tables:
-            if t.isTemporary or not superseded(t.name):
+            if t.is_temporary or not superseded(t.name):
                 continue
-            if t.tableType not in ("MANAGED", "EXTERNAL"):
+            if t.table_type not in ("MANAGED", "EXTERNAL"):
                 continue
             qual = f"`{db}`.`{t.name}`"
             try:
                 tloc = _norm(table_location(spark, qual))
             except Exception:  # noqa: BLE001 — location unreadable
                 tloc = None
-            if t.tableType == "EXTERNAL" and (
+            if t.table_type == "EXTERNAL" and (
                 tloc is None or not _under_warehouse(spark, tloc)
             ):
                 # foreign (or unverifiable) external: leave the entry;

@@ -2,6 +2,9 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 import pytest
 
@@ -21,3 +24,64 @@ from dbt_on_snowflake_spark.session import get_spark  # noqa: E402
 def spark():
     s = get_spark("tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+@dataclass
+class SparkJobs:
+    """What a block launched: job ids, the ids of every stage those jobs
+    hold, the names of the stages whose info the status store still
+    keeps, and ``actions`` — the SQL executions (one per DataFrame
+    action, however many AQE stage jobs it splits into) that ran at
+    least one job."""
+
+    jobs: list[int] = field(default_factory=list)
+    stages: list[int] = field(default_factory=list)
+    stage_names: list[str] = field(default_factory=list)
+    actions: int = 0
+
+
+def _sql_actions(spark, group: str) -> int:
+    """SQL executions of job group ``group`` that ran a job. An execution
+    takes its description from the job group's, and the block's
+    executions are the newest ones, so walk back from the newest until
+    the description changes."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    end = store.executionsCount()
+    actions = 0
+    while end > 0:
+        start = max(0, end - 64)
+        chunk = store.executionsList(start, end - start)
+        for i in range(chunk.size() - 1, -1, -1):
+            e = chunk.apply(i)
+            if e.description() != group:
+                return actions
+            actions += not e.jobs().isEmpty()
+        end = start
+    return actions
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs and stages the ``with`` body launches: the
+    body runs under its own job group, whose jobs and stages are read
+    back from the status store on exit."""
+    sc = spark.sparkContext
+    group = f"spark_jobs:{uuid.uuid4().hex}"
+    seen = SparkJobs()
+    sc.setJobGroup(group, group)
+    try:
+        yield seen
+    finally:
+        sc.setJobGroup(None, None)
+        seen.actions = _sql_actions(spark, group)
+        tracker = sc.statusTracker()
+        for job_id in sorted(tracker.getJobIdsForGroup(group)):
+            info = tracker.getJobInfo(job_id)
+            if info is None:
+                continue
+            seen.jobs.append(job_id)
+            for s in info.stageIds:
+                seen.stages.append(s)
+                si = tracker.getStageInfo(s)
+                if si is not None:
+                    seen.stage_names.append(si.name)

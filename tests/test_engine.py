@@ -147,6 +147,23 @@ def test_source_data_tests_pass(tasty, spark):
     assert not bad, [(r.relation, r.column, r.name, r.failures) for r in bad]
 
 
+def test_source_tests_job_budget(tasty, spark):
+    """The source tests launch at most one action per relation (its
+    row-level tests fused into one aggregate) plus one per ``unique`` /
+    ``relationships`` test. Running every test alone took one action
+    per test: 54 actions and 117 jobs on this fixture."""
+    from tests.conftest import spark_jobs
+
+    project, runner, _t = tasty
+    with spark_jobs(spark) as seen:
+        results = TestRunner(spark).run_source_tests(project, runner)
+    per_test = sum(r.name in ("unique", "relationships") for r in results)
+    assert seen.actions <= len(project.sources) + per_test, (
+        seen.actions, len(seen.jobs)
+    )
+    assert len(seen.jobs) < 0.9 * len(results), len(seen.jobs)
+
+
 def test_data_tests_catch_violations(tasty, spark, tmp_path):
     """Corrupted data fails the right tests (the failing-rows convention,
     reference test_is_positive_amount.sql:3-5)."""

@@ -1861,7 +1861,9 @@ def test_index_gc_fails_closed_when_catalog_unreadable(spark, monkeypatch):
     def boom(*a, **k):
         raise RuntimeError("metastore down")
 
-    monkeypatch.setattr(spark.catalog, "listTables", boom)
+    monkeypatch.setattr(
+        "dbt_on_snowflake_spark.engine.catalog.list_tables", boom
+    )
     try:
         reclaimed = gc_superseded_index_tables(
             spark, ("pq_codes_",), "eeee5555_ffff6666"

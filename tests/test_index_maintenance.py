@@ -971,3 +971,70 @@ def test_shipped_maintenance_restores_pristine_pq_and_ivf_serves(
         for t in (cd_t, cb_t, ivf_asg, ivf_cb):
             _drop_managed_table(spark, t)
 
+
+
+_SWEEP_JOBS = """
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import functions as F
+from dbt_on_snowflake_spark.engine.index_delete import fold_tombstone_families
+from dbt_on_snowflake_spark.engine.index_maintenance import compact_index_tables
+from dbt_on_snowflake_spark.operators.textops import (
+    build_text_index, text_index_append,
+)
+from dbt_on_snowflake_spark.session import get_spark
+from dbt_on_snowflake_spark.testdata import table
+from tests.conftest import SF_SMOKE, spark_jobs
+
+spark = get_spark("sweep-jobs", cpus=2, shuffle_partitions=4)
+docs = table(spark, SF_SMOKE, "documents")
+ti = dict(stats_table="sj_stats", postings_table="sj_post", doclen_table="sj_dl")
+build_text_index(spark, docs.filter("doc_id % 2 = 0"), **ti)
+text_index_append(spark, docs.filter("doc_id % 2 = 1"), **ti)
+spark.sql("CREATE DATABASE sj_db")
+spark.range(20).selectExpr("id", "id % 3 AS p").write.partitionBy(
+    "p"
+).saveAsTable("sj_db.sj_parted")
+spark.range(3).createOrReplaceTempView("sj_temp")
+first = compact_index_tables(spark)
+with spark_jobs(spark) as fold:
+    folded = fold_tombstone_families(spark)
+with spark_jobs(spark) as compact:
+    compacted = compact_index_tables(spark)
+print("RESULT " + json.dumps(dict(
+    first=[d[0] for d in first[0]], folded=folded, compacted=compacted,
+    jobs=len(fold.jobs) + len(compact.jobs),
+)))
+"""
+
+
+def test_sweeps_over_compact_catalog_launch_no_jobs(tmp_path):
+    """Over an already-compact, tombstone-free catalog the fold and
+    compaction sweeps only read metadata, and metadata costs no Spark
+    job (engine.catalog; PySpark's catalog listing ran one job per
+    partition of every list call). A fresh session in its own process,
+    so no other test's tables are in the catalog."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        SPARK_WAREHOUSE_DIR=str(tmp_path / "wh"),
+        SPARK_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _SWEEP_JOBS.format(repo=repo)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    lines = [
+        ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")
+    ]
+    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+    got = json.loads(lines[0].removeprefix("RESULT "))
+    # the append fragmented the postings: the first sweep compacted them
+    assert "sj_post" in got["first"], got
+    assert got["folded"] == [[], []]
+    assert got["compacted"] == [[], [], []]
+    assert got["jobs"] == 0, got

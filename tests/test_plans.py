@@ -17,10 +17,11 @@ from dbt_on_snowflake_spark.plans import (
     count_shuffles,
     explain_str,
     final_plan,
+    scan_counts,
     scan_for,
 )
 from dbt_on_snowflake_spark.registry import all_queries
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_jobs
 
 Q = all_queries()
 
@@ -798,21 +799,9 @@ def test_semantic_served_steady_state_no_corpus_read(spark):
     fn = Q["dedup_semantic_served"].fn
     fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()  # build
 
-    sc = spark.sparkContext
-    group = "pin:sem_served_steady"
-    sc.setJobGroup(group, "steady-state serve")
-    try:
+    with spark_jobs(spark) as seen:
         fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setJobGroup(None, None)
-    tracker = sc.statusTracker()
-    stage_names = []
-    for job_id in tracker.getJobIdsForGroup(group):
-        info = tracker.getJobInfo(job_id)
-        for s in info.stageIds if info else []:
-            si = tracker.getStageInfo(s)
-            if si is not None:
-                stage_names.append(si.name)
+    stage_names = seen.stage_names
     assert stage_names, "serve scheduled no jobs?"
     offenders = [n for n in stage_names if n.startswith("parquet at")]
     assert not offenders, (
@@ -984,10 +973,13 @@ def test_bm25_indexed_no_corpus_rescan(spark):
     # corpus-width spine/postings join is evaluated ONCE — the pre-r18
     # plan re-ran it a second time just to count df
     assert "bm25_df_" in plan
-    # formatted plans print each operator twice (tree + details), so
-    # ONE scan per relation == 2 occurrences
-    assert plan.count("Scan parquet spark_catalog.default.bm25_doclen_") == 2
-    assert plan.count("Scan parquet spark_catalog.default.bm25_postings_") == 2
+    # ONE scan node per relation in the executed plan tree
+    scans = scan_counts(Q["text_bm25_topk_indexed"].fn(spark, SF_SMOKE))
+    per_family = {
+        family: sum(n for t, n in scans.items() if t.startswith(family))
+        for family in ("bm25_doclen_", "bm25_postings_")
+    }
+    assert per_family == {"bm25_doclen_": 1, "bm25_postings_": 1}, scans
     # the postings read is partition-pruned to the query terms' parts
     assert "term_part" in plan
     assert "TakeOrderedAndProject" in plan  # top-N, never a global sort

@@ -18,7 +18,7 @@ from dbt_on_snowflake_spark.plans import count_shuffles, explain_str
 from dbt_on_snowflake_spark.registry import all_queries
 from dbt_on_snowflake_spark.scale import derive_scaled_dir
 from scale_probe import PROBE_QUERIES
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_jobs
 from tests.test_plans import _HEADLINE_MAX_SHUFFLES
 
 FACTOR = 10
@@ -169,23 +169,11 @@ def test_scaled_builders_keep_stage_counts(spark, scaled_dir, name):
     file-LISTING jobs, which are scan bookkeeping, not plan shape."""
     from scale_probe import _drop_all, run_builder
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     depth = {}
     for tag, d in (("base", SF_SMOKE), ("scaled", scaled_dir)):
-        group = f"test-build:{name}:{tag}"
-        sc.setJobGroup(group, group)
-        try:
+        with spark_jobs(spark) as seen:
             made = run_builder(spark, name, d, f"t{tag}")
-        finally:
-            sc.setJobGroup(None, None)
-        jobs = stages = 0
-        for job_id in tracker.getJobIdsForGroup(group):
-            info = tracker.getJobInfo(job_id)
-            if info is not None:
-                jobs += 1
-                stages += len(info.stageIds)
-        depth[tag] = stages - jobs
+        depth[tag] = len(seen.stages) - len(seen.jobs)
         _drop_all(spark, made)
     assert depth["scaled"] == depth["base"], (
         f"{name}: build shuffle depth drifted at 10x — {depth}"
