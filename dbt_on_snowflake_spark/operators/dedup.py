@@ -597,54 +597,28 @@ COSINE_SQL = (
     WHERE {COSINE_SQL.format(a="a.v", b="b.v")} >= 0.35
     """,
 )
-def dedup_embedding_cosine(
-    spark: SparkSession, sf_dir: str, kernel: str | None = None
-) -> DataFrame:
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, blocked by the coarse `label`
     column (IVF-style: only same-cluster pairs are compared — the
     all-pairs cross join never materializes). At 100 TB the label is a
     learned/assigned centroid id with ~sqrt(N) clusters.
 
-    ``kernel`` (default $SPARK_GRAFT_ANN_KERNEL, else 'arrow'): the
-    arrow path computes each cell's pairwise cosines in a per-label
+    Each cell's pairwise cosines are computed in a per-label
     applyInPandas numpy kernel (ONE groupBy exchange, blocked 256-row
-    products — same contract as dedup_semantic's serve kernel); 'hof'
-    keeps the label self-join with interpreted per-pair cosines.
-    Row-identical (`test_embedding_pairs_kernels_agree`)."""
-    import os as _os
-
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_ANN_KERNEL", "arrow")
+    products — same contract as dedup_semantic's serve kernel)."""
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
-    if kernel == "arrow":
-        return _embedding_pairs_arrow(e)
-    if kernel != "hof":
-        raise ValueError(f"unknown ANN kernel {kernel!r}")
-    a, b = e.alias("a"), e.alias("b")
-    cos = _cosine("a.v", "b.v")
-    return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(cos >= 0.35)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.round(cos, 4).alias("cosine"),
-        )
-    )
+    return _embedding_pairs_arrow(e)
 
 
 def _embedding_pairs_arrow(e: DataFrame, threshold: float = 0.35) -> DataFrame:
     """Per-label pairwise-cosine kernel: rows sorted by vec_id inside
     the cell, upper-triangle blocks only, threshold applied to the
-    UNROUNDED cosine (like the DF filter it replaces) and the emitted
-    value rounded half-up-away-from-zero to 4 decimals. Sequential-fold
-    dots via cumsum keep the arithmetic bit-identical to the
-    interpreted `_cosine`."""
+    UNROUNDED cosine (the oracle's WHERE) and the emitted value rounded
+    half-up-away-from-zero to 4 decimals. Sequential-fold dots via
+    cumsum keep the arithmetic bit-identical to the oracle's
+    list_dot_product."""
     import numpy as np
 
     BLK = 256

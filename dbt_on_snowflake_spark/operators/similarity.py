@@ -50,51 +50,6 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _topk(joined: DataFrame) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    # degenerate zero-norm embeddings make the cosine undefined —
-    # NULL (advice r8); DESC NULLS LAST would still seat them when a
-    # query has < k finite candidates, so drop them outright, matching
-    # the Arrow kernel's isfinite keep-filter. The drop filters on the
-    # STAGED norm product, not isnotnull(cosine): the pushed isnotnull
-    # re-evaluates the entire cosine inside the join condition (guide
-    # §4.4-shaped duplication); staged legs keep the arithmetic
-    # bit-identical (_cosine_from is _cosine's own combine step). The
-    # norm-product test covers every well-formed fixed-dim input; an
-    # array with NULL elements or mismatched dims could yield a NULL
-    # dot past it, but that input is outside the data contract on both
-    # kernels (np.stack in the Arrow kernel rejects ragged arrays
-    # outright) and every oracle assumes fixed dims (review r17 #2).
-    return (
-        joined.select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-            F.col("q.v").alias("qv"),
-            F.col("c.v").alias("cv"),
-            _cosine_norm("q.v").alias("qn"),
-            _cosine_norm("c.v").alias("cn"),
-        )
-        .filter((F.col("qn") * F.col("cn")) != F.lit(0.0))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                F.round(
-                    _cosine_from(
-                        _cosine_dot("qv", "cv"), F.col("qn"), F.col("cn")
-                    ),
-                    4,
-                )
-                + 0.0  # collapse -0.0
-            ).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-    )
-
-
 _ORACLE_TOPK = """
     WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
     q AS (SELECT * FROM e WHERE {query_pred}),
@@ -129,36 +84,21 @@ _ORACLE_TOPK = """
     ),
     headline=True,
 )
-def ann_topk_bruteforce(
-    spark: SparkSession, sf_dir: str, kernel: str | None = None
-) -> DataFrame:
+def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for every 50th vector (bounded at
     MAX_QUERIES). The corpus is scanned once, never shuffled; the only
     shuffle is the final per-query top-k merge.
 
-    ``kernel`` (default $SPARK_GRAFT_ANN_KERNEL, else 'arrow'): 'arrow'
-    scores each Arrow batch against the bounded query matrix in numpy
-    (sequential-fold cumsum dots, identical rounding) and emits only
-    each batch's LOCAL top-k per query — the classic partial-top-k
-    pattern, so the rank shuffle carries O(partitions x Q x k) rows
-    instead of O(N x Q). 'hof' keeps the broadcast nested-loop join +
-    interpreted per-pair cosine (`test_ann_bruteforce_kernels_agree`
-    pins row equality)."""
-    import os as _os
-
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_ANN_KERNEL", "arrow")
+    Each Arrow batch is scored against the bounded query matrix in numpy
+    (sequential-fold cumsum dots, 4-decimal rounding) and emits only its
+    LOCAL top-k per query — the classic partial-top-k pattern, so the
+    rank shuffle carries O(partitions x Q x k) rows instead of
+    O(N x Q)."""
     e = _vectors(spark, sf_dir)
-    if kernel == "arrow":
-        return _topk_window(
-            _bruteforce_score_arrow(e.select("vec_id", "v"),
-                                    e.filter(F.expr(_QUERY_PRED)))
-        )
-    if kernel != "hof":
-        raise ValueError(f"unknown ANN kernel {kernel!r}")
-    q = F.broadcast(e.filter(F.expr(_QUERY_PRED))).alias("q")
-    c = e.alias("c")
-    joined = q.join(c, F.col("q.vec_id") != F.col("c.vec_id"))
-    return _topk(joined)
+    return _topk_window(
+        _bruteforce_score_arrow(e.select("vec_id", "v"),
+                                e.filter(F.expr(_QUERY_PRED)))
+    )
 
 
 def _topk_window(scored: DataFrame, k: int = TOP_K) -> DataFrame:
@@ -182,19 +122,19 @@ def _bruteforce_score_arrow(
     """Arrow-vectorized cosine scorer with per-batch partial top-k: each
     Arrow batch computes its cosine block against the bounded query
     matrix (driver-side closure, hard-capped at MAX_QUERIES by
-    _QUERY_PRED — the same payload the HOF path broadcasts) and emits
-    only its local top-k per query. Arithmetic contract matches the HOF
-    `_cosine`: sequential-fold dots via cumsum, dot/(na*nb) operation
-    order, away-from-zero half-up rounding to 4 decimals. Blocked
-    (256 rows x 64 queries) so elementwise products stay ~8 MB
-    regardless of batch or query-set size.
+    _QUERY_PRED) and emits only its local top-k per query. Arithmetic
+    contract matches the SQL `_cosine`/COSINE_SQL: sequential-fold dots
+    via cumsum, dot/(na*nb) operation order, away-from-zero half-up
+    rounding to 4 decimals. Blocked (256 rows x 64 queries) so
+    elementwise products stay ~8 MB regardless of batch or query-set
+    size.
 
     The one kernel serves the whole exact-ANN family:
     ``probes`` = (query_id, label) restricts each query to its IVF
     cells (membership mask on the batch's label column — single-probe
     and multiprobe are just different probe sets); ``max_cos`` drops
     pairs at/above a band (hard-negative mining's near-duplicate cut,
-    applied to the ROUNDED cosine like the DF filter it replaces)."""
+    applied to the ROUNDED cosine, as in the oracle)."""
     import numpy as np
 
     qrows = queries.select("vec_id", "v").collect()  # bounded <= MAX_QUERIES
@@ -249,8 +189,8 @@ def _bruteforce_score_arrow(
             ) / 10000.0 + 0.0
             # zero-norm embeddings produce NaN (0/0): map to -inf
             # explicitly so the drop is a stated contract (the final
-            # isfinite keep-filter would exclude NaN anyway) and the
-            # HOF twin's ~isnan filter agrees row-for-row (advice r8)
+            # isfinite keep-filter would exclude NaN anyway), matching
+            # the oracles' NOT isnan guard row-for-row
             cos[np.isnan(cos)] = -np.inf
             # self-pairs can never appear in the output
             cos[qids[:, None] == ids[None, :]] = -np.inf
@@ -377,18 +317,14 @@ def _multiprobe_topk(
     q: DataFrame,
     cvec: DataFrame,
     corpus: DataFrame,
-    kernel: str | None = None,
     nprobe: int = N_PROBE,
 ) -> DataFrame:
     """nprobe-centroid probe + per-query top-k, shared by the
     recompute-per-query path, the persisted-index path (same inputs ->
     bit-identical output, so both share one oracle), and the
     single-probe special case (``ann_ivf_topk``: nprobe=1, same probe
-    ranking). The arrow default feeds the probe sets into the shared
-    scorer as a kernel-side membership mask; 'hof' keeps the
-    probe/corpus join pipeline."""
-    import os as _os
-
+    ranking). The probe sets feed the shared Arrow scorer as a
+    kernel-side membership mask."""
     cvec = cvec.alias("c")
     wq = Window.partitionBy("query_id").orderBy(
         F.col("ccos").desc(), F.col("label").asc()
@@ -404,23 +340,11 @@ def _multiprobe_topk(
         .filter(F.col("crank") <= nprobe)
         .select("query_id", "label")
     )
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_ANN_KERNEL", "arrow")
-    if kernel == "arrow":
-        return _topk_window(
-            _bruteforce_score_arrow(
-                corpus.select("vec_id", "label", "v"), q, probes=probes
-            )
-        )
-    c = corpus.alias("c")
-    joined = (
-        probes.join(c, F.col("c.label") == probes.label)
-        .join(
-            q,
-            (F.col("q.vec_id") == probes.query_id)
-            & (F.col("q.vec_id") != F.col("c.vec_id")),
+    return _topk_window(
+        _bruteforce_score_arrow(
+            corpus.select("vec_id", "label", "v"), q, probes=probes
         )
     )
-    return _topk(joined)
 
 
 @query(
@@ -428,9 +352,7 @@ def _multiprobe_topk(
     driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=None,  # set post-hoc: _set_trained_ivf_oracles()
 )
-def ann_ivf_topk(
-    spark: SparkSession, sf_dir: str, kernel: str | None = None
-) -> DataFrame:
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN, single probe: the strict nprobe=1 special case of
     ``ann_ivf_multiprobe`` (same trained cells, same probe ranking —
     the retirement contract in the registry ledger). Each query scans
@@ -441,7 +363,7 @@ def ann_ivf_topk(
     e = _vectors(spark, sf_dir)
     _, cvec, corpus = _trained_cells_and_corpus(spark, e)
     q = F.broadcast(e.filter(F.expr(_QUERY_PRED))).alias("q")
-    return _multiprobe_topk(q, cvec, corpus, kernel=kernel, nprobe=1)
+    return _multiprobe_topk(q, cvec, corpus, nprobe=1)
 
 
 # ------------------------------------------------------ persisted IVF index
@@ -949,30 +871,30 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _round4_away(x):
     """numpy half-up-away-from-zero rounding to 4 decimals on the
     1e4-scaled value — C/DuckDB ROUND semantics, matching the engine's
-    F.round contract on this data (see _pq_encode_arrow)."""
+    F.round contract on this data (see _pq_encode)."""
     import numpy as np
 
     return np.copysign(np.floor(np.abs(x) * 10000.0 + 0.5), x) / 10000.0 + 0.0
 
 
-def _semantic_prune_arrow(
+def _semantic_prune(
     spark: SparkSession, centroids_table: str, assignments_table: str
 ) -> DataFrame:
-    """Per-cell vectorized serve path (r8): ONE shuffle (groupBy label)
-    + an applyInPandas kernel that scores and prunes each IVF cell in
-    numpy — replacing the broadcast-join + pair self-join + distinct +
-    join-back pipeline (4 exchanges, interpreted per-pair HOF cosines)
-    with the SemDeDup-canonical per-cluster matrix computation. Same
-    arithmetic contract as the HOF path: sequential-fold dots (cumsum),
+    """The SERVE path of semantic dedup: within-cluster cosine pruning
+    over an already-persisted IVF index — no index construction (the
+    100 TB operating mode, where the index is built once and reused
+    across curation runs). ONE shuffle (groupBy label) + an
+    applyInPandas kernel that scores and prunes each IVF cell in numpy,
+    the SemDeDup-canonical per-cluster matrix computation. Arithmetic
+    contract (the DuckDB oracle's): sequential-fold dots (cumsum),
     dot/(na*nb) operation order, away-from-zero half-up rounding,
     (ccos, vec_id) ordering, drop iff an earlier row's rounded cosine
-    >= SEM_THRESHOLD (`test_semantic_kernels_agree`).
+    >= SEM_THRESHOLD.
 
     Memory posture: pairwise cosines are computed in fixed 256x256 row
     blocks (block x block x dim float64 ~= 33 MB at dim 64), so a cell
     larger than memory still streams; the centroid table rides into the
-    UDF as a bounded driver-side closure (|cells| x dim — the same
-    payload the HOF path broadcasts)."""
+    UDF as a bounded driver-side closure (|cells| x dim)."""
     import numpy as np
 
     cents = {
@@ -1033,65 +955,6 @@ def _semantic_prune_arrow(
         )
 
     return a.groupBy("label").applyInPandas(prune, out_schema)
-
-
-def _semantic_prune(
-    spark: SparkSession,
-    centroids_table: str,
-    assignments_table: str,
-    kernel: str | None = None,
-) -> DataFrame:
-    """The SERVE path of semantic dedup: within-cluster cosine pruning
-    over an already-persisted IVF index — no index construction (the
-    100 TB operating mode, where the index is built once and reused
-    across curation runs). ``kernel`` (default $SPARK_GRAFT_SEM_KERNEL,
-    else 'arrow') selects the per-cell vectorized applyInPandas kernel
-    or the r7 join pipeline ('hof'); both produce identical rows."""
-    import os as _os
-
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_SEM_KERNEL", "arrow")
-    if kernel == "arrow":
-        return _semantic_prune_arrow(spark, centroids_table, assignments_table)
-    if kernel != "hof":
-        raise ValueError(f"unknown semantic kernel {kernel!r}")
-    cvec = F.broadcast(spark.table(centroids_table)).alias("c")
-    a = _live_assignments(spark, assignments_table).select(
-        "vec_id", "label", "v"
-    )
-    scored = (
-        a.alias("e")
-        .join(cvec, "label")
-        .select(
-            F.col("e.vec_id").alias("vec_id"),
-            "label",
-            F.col("e.v").alias("v"),
-            (F.round(_cosine("e.v", "c.v"), 4) + 0.0).alias("ccos"),
-        )
-    )
-    sa, sb = scored.alias("a"), scored.alias("b")
-    earlier = (F.col("a.ccos") < F.col("b.ccos")) | (
-        (F.col("a.ccos") == F.col("b.ccos"))
-        & (F.col("a.vec_id") < F.col("b.vec_id"))
-    )
-    dropped = (
-        sa.join(
-            sb,
-            (F.col("a.label") == F.col("b.label"))
-            & earlier
-            & (F.round(_cosine("a.v", "b.v"), 4) >= SEM_THRESHOLD),
-        )
-        .select(F.col("b.vec_id").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        scored.join(dropped.alias("d"), "vec_id", "left")
-        .select(
-            "vec_id",
-            "label",
-            "ccos",
-            F.col("d.vec_id").isNull().alias("kept"),
-        )
-    )
 
 
 @query(
@@ -1555,29 +1418,6 @@ IVFPQ_ALGO = f"ivfpq1:{COARSE_EXTRA}:{COARSE_ITERS}:{PQ_CODEBOOK_ALGO}"
 ANN_ALGO = f"annivf1:{COARSE_EXTRA}:{COARSE_ITERS}"
 
 
-def _dot_col(a, b):
-    """Sequential-fold dot product of two array<double> Columns — the
-    same left-to-right order DuckDB's list_dot_product uses, so both
-    engines see bit-identical IEEE sums."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _subvec(col, m: int):
-    """m-th (1-based) of PQ_M equal contiguous slices of an array column."""
-    sub_len = (F.size(col) / F.lit(PQ_M)).cast("int")
-    return F.slice(col, F.lit(m - 1) * sub_len + F.lit(1), sub_len)
-
-
-def _l2sq(a, b):
-    """Squared L2 distance via the dot-product identity — three
-    sequential folds, mirroring the oracle's list_dot_product calls."""
-    return _dot_col(a, a) - 2 * _dot_col(a, b) + _dot_col(b, b)
-
-
 def _codebook_row(cvec: DataFrame) -> DataFrame:
     """Collapse the tiny (label, centroid) table into ONE row holding the
     full codebook — the broadcast side of every PQ step. Bounded by
@@ -1613,7 +1453,7 @@ def _round4_signed(x):
 def _seq_fold_dot(A, B):
     """(n, d) x (K, d) -> (n, K) dot products accumulated left-to-right
     over the d dims — bit-identical to list_dot_product's sequential
-    fold / the HOF ``F.aggregate``, without materializing an (n, K, d)
+    fold, without materializing an (n, K, d)
     prefix tensor. ONE definition shared by the Lloyd trainer and the
     Arrow encode kernel so the fold convention cannot diverge (r15
     review finding 4)."""
@@ -1870,15 +1710,12 @@ def _qlut_rows(
 ) -> list[tuple[int, list[dict]]]:
     """The per-query ADC lookup tables, computed driver-side from the
     trained/persisted codebook ``entries`` and the BOUNDED query
-    relation — |queries| x PQ_M x K int64, the same payload the
-    interpreted expression path broadcasts, returned as the plain
+    relation — |queries| x PQ_M x K int64, returned as the plain
     (query_id, luts) payload ``_adc_score_arrow`` closes over directly
-    (no DataFrame roundtrip — the data never needs to leave the driver;
-    r15 review finding 5). At K = |labels| + PQ_LLOYD_EXTRA the HOF LUT
-    build had become the serve's dominant cost. Arithmetic mirrors the
-    expression path AND the oracle: sequential in-order dot over each
-    subspace, then round-half-away-from-zero on dot*10000
-    (F.round(x) / DuckDB ROUND(x)) cast to int64."""
+    (no DataFrame roundtrip — the data never needs to leave the driver).
+    Arithmetic mirrors the oracle: sequential in-order dot over each
+    subspace, then round-half-away-from-zero on dot*10000 (DuckDB
+    ROUND(x)) cast to int64."""
     import numpy as np
 
     if isinstance(queries, list):
@@ -1907,73 +1744,21 @@ def _qlut_rows(
     return out
 
 
-def _qlut_expr(queries: DataFrame, cb_row: DataFrame) -> DataFrame:
-    """The per-query LUT relation built with Catalyst HOF expressions —
-    the INTERPRETED path's LUT builder (the arrow path computes the
-    same payload driver-side in ``_qlut_rows``). One definition shared
-    by every interpreted serve so the rounding convention cannot
-    diverge across them (r15 review finding 4)."""
+def _pq_encode(corpus: DataFrame, cb_row: DataFrame) -> DataFrame:
+    """(*corpus columns but v, bests: array<struct<d,code>>) — per
+    subspace the nearest codebook entry (distance rounded to 4 decimals,
+    lowest-label tie-break). One pass over the corpus, never shuffled.
 
-    def lut_entry(m: int, qsv):
-        def entry(c):
-            return F.struct(
-                c["label"].alias("k"),
-                F.round(_dot_col(qsv, _subvec(c["v"], m)) * 10000)
-                .cast("long")
-                .alias("p"),
-            )
-
-        return entry
-
-    luts = []
-    for m in range(1, PQ_M + 1):
-        qsv = _subvec(F.col("v"), m)
-        luts.append(
-            F.map_from_entries(F.transform(F.col("cb"), lut_entry(m, qsv)))
-        )
-    return queries.crossJoin(F.broadcast(cb_row)).select(
-        F.col("vec_id").alias("query_id"), F.array(*luts).alias("luts")
-    )
-
-
-def _pq_encode_hof(corpus: DataFrame, cb_row: DataFrame) -> DataFrame:
-    """Catalyst higher-order-function encode kernel: JVM-side and
-    shuffle-free, but the aggregate/zip_with expressions run through the
-    interpreted evaluator (no codegen) — the reference baseline the
-    Arrow kernel is A/B'd against (`ann_pq_adc_topk_hof` in bench)."""
-    enc = corpus.crossJoin(F.broadcast(cb_row))
-
-    # PySpark infers lambda arity from the signature, so loop variables
-    # must close over a factory, not default args.
-    def nearest(m: int, sv):
-        def entry(c):
-            return F.struct(
-                (F.round(_l2sq(sv, _subvec(c["v"], m)), 4) + 0.0).alias("d"),
-                c["label"].alias("code"),
-            )
-
-        return entry
-
-    bests = []
-    for m in range(1, PQ_M + 1):
-        sv = _subvec(F.col("v"), m)
-        bests.append(F.array_min(F.transform(F.col("cb"), nearest(m, sv))))
-    keep = [c for c in corpus.columns if c != "v"]
-    return enc.select(*keep, F.array(*bests).alias("bests"))
-
-
-def _pq_encode_arrow(corpus: DataFrame, cb_row: DataFrame) -> DataFrame:
-    """Arrow-batched vectorized encode kernel (SCALING.md seam, built in
-    r8): the same arithmetic as the HOF kernel — sequential-fold dot
-    products (numpy cumsum is a left-to-right scan, bit-identical to the
-    fold), the identity l2sq = aa - 2*ab + bb in the same operation
-    order, half-up rounding on the 1e4-scaled value (DuckDB's ROUND
-    method), ascending-label argmin tie-break — but evaluated in numpy
-    over Arrow record batches instead of the interpreted expression
-    walker. The codebook is collected driver-side: bounded control-plane
-    data (|labels| entries of fixed dim, same payload the HOF path
-    broadcasts) closed over into the UDF. Per-partition cost is one
-    narrow map; no shuffle, no corpus collect."""
+    Evaluated in numpy over Arrow record batches with the oracle's
+    arithmetic: sequential-fold dot products (numpy cumsum is a
+    left-to-right scan, bit-identical to the fold), the identity
+    l2sq = aa - 2*ab + bb in the same operation order, half-up rounding
+    on the 1e4-scaled value (DuckDB's ROUND method), ascending-label
+    argmin tie-break. The codebook is collected driver-side: bounded
+    control-plane data (|labels| entries of fixed dim) closed over into
+    the UDF. Per-partition cost is one narrow map; no shuffle, no corpus
+    collect. An empty codebook (empty training input) has no nearest
+    entry: every row gets ``PQ_M`` NULL ``bests`` entries."""
     import numpy as np
     from pyspark.sql.types import (
         ArrayType,
@@ -1987,16 +1772,6 @@ def _pq_encode_arrow(corpus: DataFrame, cb_row: DataFrame) -> DataFrame:
         (int(ent["label"]), np.asarray(ent["v"], dtype=np.float64))
         for ent in (cb_row.collect()[0]["cb"] or [])
     )
-    if not entries:
-        # degenerate empty codebook (empty input): the HOF plan already
-        # yields the right empty/NULL shape — reuse it
-        return _pq_encode_hof(corpus, cb_row)
-    labels = np.array([lab for lab, _ in entries], dtype=np.int64)
-    C = np.stack([v for _, v in entries])  # (L, D)
-    sub = C.shape[1] // PQ_M
-    Bs = [C[:, m * sub:(m + 1) * sub] for m in range(PQ_M)]
-    bbs = [np.cumsum(b * b, axis=1)[:, -1] for b in Bs]
-
     keep_fields = [f for f in corpus.schema.fields if f.name != "v"]
     keep_names = [f.name for f in keep_fields]
     out_schema = StructType(
@@ -2015,6 +1790,21 @@ def _pq_encode_arrow(corpus: DataFrame, cb_row: DataFrame) -> DataFrame:
             )
         ]
     )
+
+    if not entries:
+
+        def no_codes(batches):
+            for pdf in batches:
+                out = pdf[keep_names].copy()
+                out["bests"] = [[None] * PQ_M for _ in range(len(pdf))]
+                yield out
+
+        return corpus.mapInPandas(no_codes, out_schema)
+    labels = np.array([lab for lab, _ in entries], dtype=np.int64)
+    C = np.stack([v for _, v in entries])  # (L, D)
+    sub = C.shape[1] // PQ_M
+    Bs = [C[:, m * sub:(m + 1) * sub] for m in range(PQ_M)]
+    bbs = [np.cumsum(b * b, axis=1)[:, -1] for b in Bs]
 
     def encode(batches):
         for pdf in batches:
@@ -2049,29 +1839,6 @@ def _pq_encode_arrow(corpus: DataFrame, cb_row: DataFrame) -> DataFrame:
     return corpus.mapInPandas(encode, out_schema)
 
 
-def _pq_encode(
-    corpus: DataFrame, cb_row: DataFrame, kernel: str | None = None
-) -> DataFrame:
-    """(vec_id, bests: array<struct<d,code>>) — per subspace the nearest
-    codebook entry (distance rounded to 4 decimals, label tie-break via
-    lexicographic min). One pass over the corpus, never shuffled.
-
-    ``kernel`` selects the evaluator (default from
-    $SPARK_GRAFT_PQ_KERNEL, else 'arrow'): 'arrow' = numpy over Arrow
-    batches (vectorized — the 100 TB encode path); 'hof' = Catalyst
-    higher-order functions (interpreted; kept as the A/B reference).
-    Both produce bit-identical rows (`test_pq_kernels_agree` +  the
-    shared DuckDB oracle on each)."""
-    import os as _os
-
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_PQ_KERNEL", "arrow")
-    if kernel == "arrow":
-        return _pq_encode_arrow(corpus, cb_row)
-    if kernel == "hof":
-        return _pq_encode_hof(corpus, cb_row)
-    raise ValueError(f"unknown PQ kernel {kernel!r}: use 'arrow' or 'hof'")
-
-
 def _assign_cells(
     corpus: DataFrame, entries, *, with_dist: bool = False
 ) -> DataFrame:
@@ -2089,7 +1856,7 @@ def _assign_cells(
     reportable assignment score).
 
     Arithmetic mirrors the oracle's ``casg`` CTE bit for bit (the
-    ``_pq_encode_arrow`` discipline): squared L2 via the aa - 2ab + bb
+    ``_pq_encode`` discipline): squared L2 via the aa - 2ab + bb
     identity with sequential-fold dots, half-up rounding on the
     1e4-scaled value, argmin with lowest-cell tie-break (cells are
     sorted, so numpy's first-min IS the lowest cell)."""
@@ -2465,7 +2232,7 @@ def _pq_rerank_oracle(
 @query(
     "ann_pq_codes",
     driver=False,  # r7-born; in the r8 driver export (R8_EXPORT)
-    headline=True,  # r8: encode-stage A/B anchor (vs ann_pq_codes_hof)
+    headline=True,  # the encode stage on its own
     oracle=f"""
     WITH {_PQ_CODES_CTE}
     SELECT vec_id, CAST(m AS BIGINT) AS m, CAST(code AS BIGINT) AS code,
@@ -2500,10 +2267,7 @@ def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_pq_adc_topk_oracle(_PQ_CODES_CTE, TOP_K),
 )
 def ann_pq_adc_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    kernel: str | None = None,
-    k: int = TOP_K,
+    spark: SparkSession, sf_dir: str, k: int = TOP_K
 ) -> DataFrame:
     """ADC top-k over PQ codes: each query dots its subvectors against
     every codebook entry ONCE (the lookup table, scaled to exact int64
@@ -2517,44 +2281,21 @@ def ann_pq_adc_topk(
     crossJoin; the only shuffle is the per-query top-k window — the
     same posture as ann_topk_bruteforce. At 100 TB this composes with
     the IVF probe (restrict codes to probed cells, then ADC). Both the
-    encode stage and the ADC scoring scan run Arrow-vectorized kernels
-    by default (r8; `ann_pq_adc_topk_hof` keeps the all-interpreted
-    pipeline benched as the A/B reference)."""
-    import os as _os
-
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_PQ_KERNEL", "arrow")
+    encode stage and the ADC scoring scan run Arrow-vectorized kernels."""
     e = _vectors(spark, sf_dir)
     # the codebook feeds BOTH the encode side and the query LUTs; the
     # Lloyd trainer hands its entries over as local relations — nothing
     # to checkpoint, both consumers reuse the same in-memory rows. The
-    # training sample and the (arrow path's) query rows ride ONE
-    # collect job (_sample_and_query_rows — the non-default hof branch
-    # carries the bounded query rows unused rather than keeping a
-    # second collect shape alive).
+    # training sample and the query rows ride ONE collect job
+    # (_sample_and_query_rows).
     samp, qrows = _sample_and_query_rows(e)
     entries = _lloyd_train_rows(samp)
     cb_row = _entries_cb_row(spark, entries)
-    codes = _pq_encode(e.select("vec_id", "v"), cb_row, kernel=kernel)
+    codes = _pq_encode(e.select("vec_id", "v"), cb_row)
     w = Window.partitionBy("query_id").orderBy(
         F.col("approx_dot_scaled").desc(), F.col("neighbor_id").asc()
     )
-    if kernel == "arrow":
-        scored = _adc_score_arrow(codes, _qlut_rows(qrows, entries), k=k)
-    else:
-        qlut = _qlut_expr(e.filter(F.expr(_QUERY_PRED)), cb_row)
-        score = None
-        for m in range(PQ_M):
-            term = F.element_at(F.col("luts")[m], F.col("bests")[m]["code"])
-            score = term if score is None else score + term
-        scored = (
-            codes.crossJoin(F.broadcast(qlut))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                score.alias("approx_dot_scaled"),
-            )
-        )
+    scored = _adc_score_arrow(codes, _qlut_rows(qrows, entries), k=k)
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
@@ -2563,21 +2304,20 @@ def ann_pq_adc_topk(
 
 def _adc_score_arrow(
     codes: DataFrame,
-    qlut: DataFrame | list,
+    qlut: list,
     probes: DataFrame | list | None = None,
     k: int = TOP_K,
 ) -> DataFrame:
-    """Arrow-vectorized ADC scoring scan (r8): the per-(row, query)
-    ``element_at`` map lookups + integer adds of the interpreted path
-    become one numpy gather-and-sum per Arrow batch, and each batch
-    emits only its LOCAL top-k per query (partial top-k — the rank
-    shuffle carries O(partitions x Q x k) rows, not O(N x Q)). The
-    query LUTs are collected driver-side — bounded by construction at
-    MAX_QUERIES x PQ_M x |labels| int64 (the _QUERY_PRED hard cap; the
-    same payload the interpreted path broadcasts) — and closed over
-    into the UDF. Scores are sums of the SAME int64 LUT entries, so the
-    arithmetic is exact and engine-portable; the per-query top-k merge
-    window stays in Spark (the plan's only shuffle).
+    """Arrow-vectorized ADC scoring scan: per Arrow batch, the PQ_M LUT
+    lookups + integer adds of every (row, query) pair are one numpy
+    gather-and-sum, and each batch emits only its LOCAL top-k per query
+    (partial top-k — the rank shuffle carries O(partitions x Q x k)
+    rows, not O(N x Q)). ``qlut`` is the driver-side ``_qlut_rows``
+    payload — bounded by construction at MAX_QUERIES x PQ_M x |labels|
+    int64 (the _QUERY_PRED hard cap) — closed over into the UDF.
+    Scores are sums of the SAME int64 LUT entries, so the arithmetic is
+    exact and engine-portable; the per-query top-k merge window stays
+    in Spark (the plan's only shuffle).
 
     ``probes`` (IVF+PQ composition): a (query_id, plabel) DataFrame
     restricting each query to its probed cells — collected too (bounded
@@ -2586,26 +2326,19 @@ def _adc_score_arrow(
     join."""
     import numpy as np
 
-    if isinstance(qlut, DataFrame):
-        # interpreted-path relation handed in: collect the bounded rows
-        # (<= MAX_QUERIES, see _QUERY_PRED)
-        pairs = [(r.query_id, r.luts) for r in qlut.collect()]
-    else:
-        # the driver-side _qlut_rows payload, used directly
-        pairs = qlut
-    if not pairs:
+    if not qlut:
         return codes.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, approx_dot_scaled long"
         )
     labels = np.array(
-        sorted(int(k) for k in pairs[0][1][0].keys()), dtype=np.int64
+        sorted(int(k) for k in qlut[0][1][0].keys()), dtype=np.int64
     )
-    qids = np.array([q for q, _ in pairs], dtype=np.int64)
+    qids = np.array([q for q, _ in qlut], dtype=np.int64)
     # LUT tensor (Q, M, L): gather target for the code matrix
     lut = np.array(
         [
             [[lu[m][int(lab)] for lab in labels] for m in range(PQ_M)]
-            for _, lu in pairs
+            for _, lu in qlut
         ],
         dtype=np.int64,
     )
@@ -2690,59 +2423,6 @@ def _adc_score_arrow(
     )
 
 
-@query(
-    "ann_pq_adc_topk_hof",
-    driver=False,  # kernel A/B twin — verified by the local parity replica
-    # headline until r14; demoted r15: the Lloyd codebook grew K from
-    # |labels| to |labels| + PQ_LLOYD_EXTRA, a ~6x workload increase
-    # that is linear in entries for the INTERPRETED evaluator — benching
-    # it would read as a regression when it is the same kernel on a
-    # legitimately larger codebook. The A/B is recorded once in
-    # SCALING.md (r15 measurement); parity still verifies it per run.
-    oracle=None,  # set below: shares ann_pq_adc_topk's oracle verbatim
-)
-def ann_pq_adc_topk_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``ann_pq_adc_topk`` pinned to the interpreted HOF kernels (encode
-    AND scoring): the A/B reference for the Arrow kernels (same oracle,
-    same rows — the pipelines differ only in evaluator)."""
-    return ann_pq_adc_topk(spark, sf_dir, kernel="hof")
-
-
-@query(
-    "ann_pq_codes_hof",
-    driver=False,  # kernel A/B twin — verified by the local parity replica
-    # headline until r14; demoted r15 with its full-query twin (see
-    # ann_pq_adc_topk_hof: the Lloyd codebook's larger K makes the
-    # interpreted evaluator's linear-in-entries cost read as a bench
-    # regression). SCALING.md records the r15 encode-stage A/B.
-    oracle=None,  # set below: shares ann_pq_codes' oracle verbatim
-)
-def ann_pq_codes_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``ann_pq_codes`` pinned to the interpreted HOF encode kernel —
-    the encode-stage A/B isolates the kernel speedup the full-query
-    pair blends with LUT build + scoring + ranking."""
-    e = _vectors(spark, sf_dir)
-    wide = _pq_encode(e.select("vec_id", "v"), _pq_cb_row(e), kernel="hof")
-    return wide.select(
-        "vec_id", F.posexplode("bests").alias("pos", "b")
-    ).select(
-        "vec_id",
-        (F.col("pos") + 1).cast("long").alias("m"),
-        F.col("b.code").alias("code"),
-        F.col("b.d").alias("dist"),
-    )
-
-
-def _set_pq_hof_oracles() -> None:
-    from dbt_on_snowflake_spark.registry import QUERIES
-
-    QUERIES["ann_pq_adc_topk_hof"].oracle = QUERIES["ann_pq_adc_topk"].oracle
-    QUERIES["ann_pq_codes_hof"].oracle = QUERIES["ann_pq_codes"].oracle
-
-
-_set_pq_hof_oracles()
-
-
 # ------------------------------------------------------ filtered ANN search
 
 # Candidate-side metadata predicate — the "filtered vector search" shape
@@ -2767,9 +2447,7 @@ assert _ANN_FILTER_PRED_VLABEL.startswith("vlabel ")
         k=TOP_K,
     ),
 )
-def ann_filtered_topk(
-    spark: SparkSession, sf_dir: str, kernel: str | None = None
-) -> DataFrame:
+def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered vector search: exact top-k restricted to candidates
     matching a metadata predicate (PRE-filtering — the filter narrows
     the scan before any scoring, so the top-k is over the filtered set;
@@ -2778,23 +2456,13 @@ def ann_filtered_topk(
     a selective filter skips row groups before a single dot product
     runs — the same plan posture as ann_topk_bruteforce over a smaller
     scan."""
-    import os as _os
-
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_ANN_KERNEL", "arrow")
     e = _vectors(spark, sf_dir)
     corpus = e.filter(F.expr(ANN_FILTER_PRED))
-    if kernel == "arrow":
-        return _topk_window(
-            _bruteforce_score_arrow(
-                corpus.select("vec_id", "v"), e.filter(F.expr(_QUERY_PRED))
-            )
+    return _topk_window(
+        _bruteforce_score_arrow(
+            corpus.select("vec_id", "v"), e.filter(F.expr(_QUERY_PRED))
         )
-    if kernel != "hof":
-        raise ValueError(f"unknown ANN kernel {kernel!r}")
-    q = F.broadcast(e.filter(F.expr(_QUERY_PRED))).alias("q")
-    c = corpus.alias("c")
-    joined = q.join(c, F.col("q.vec_id") != F.col("c.vec_id"))
-    return _topk(joined)
+    )
 
 
 # Filtered search over the PERSISTED IVF index, with deterministic
@@ -2861,9 +2529,7 @@ def _widened_probes(
     driver=False,  # r10-born: R11_ROTATE_IN
     oracle=None,  # set post-hoc: _set_trained_ivf_oracles()
 )
-def ann_filtered_indexed(
-    spark: SparkSession, sf_dir: str, kernel: str | None = None
-) -> DataFrame:
+def ann_filtered_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``ann_filtered_topk``'s pre-filter composed with the PERSISTED
     IVF index (the production filtered-vector-search shape, closing r9
     verdict Missing #3 — both halves existed separately): candidates
@@ -2875,8 +2541,6 @@ def ann_filtered_indexed(
     index-side aggregate (|cells| rows, broadcast). Index built once on
     first call (the dedup_semantic_served convention: tableExists guard
     + its own job group), serving is pure index reads after that."""
-    import os as _os
-
     from dbt_on_snowflake_spark.testdata import index_suffix
 
     # fingerprinted suffix: a regenerated corpus rotates the tables
@@ -2918,20 +2582,7 @@ def ann_filtered_indexed(
         TOP_K,
     )
     corpus = matching.select("vec_id", "label", "v")
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_ANN_KERNEL", "arrow")
-    if kernel == "arrow":
-        return _topk_window(
-            _bruteforce_score_arrow(corpus, qdf, probes=probes)
-        )
-    if kernel != "hof":
-        raise ValueError(f"unknown ANN kernel {kernel!r}")
-    c = corpus.alias("c")
-    joined = probes.join(c, F.col("c.label") == probes.label).join(
-        F.broadcast(qdf).alias("q"),
-        (F.col("q.vec_id") == probes.query_id)
-        & (F.col("q.vec_id") != F.col("c.vec_id")),
-    )
-    return _topk(joined)
+    return _topk_window(_bruteforce_score_arrow(corpus, qdf, probes=probes))
 
 
 # --------------------------------------------------- two-stage PQ serve path
@@ -2949,9 +2600,7 @@ RERANK_SHORTLIST = 4 * TOP_K  # ADC candidates carried into exact rerank
         k=TOP_K,
     ),
 )
-def ann_pq_rerank_topk(
-    spark: SparkSession, sf_dir: str, kernel: str | None = None
-) -> DataFrame:
+def ann_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage ANN serving — the production PQ pattern (IVFADC +
     reranking, cf. Jégou et al. 2011 §V): stage 1 scores the WHOLE
     corpus from its compact PQ codes (ADC — map lookups + integer adds,
@@ -2971,9 +2620,9 @@ def ann_pq_rerank_topk(
     Q x {RERANK_SHORTLIST} rows. No shuffle ever carries corpus-sized
     data."""
     e = _vectors(spark, sf_dir)
-    shortlist = ann_pq_adc_topk(
-        spark, sf_dir, kernel=kernel, k=RERANK_SHORTLIST
-    ).select("query_id", "neighbor_id")
+    shortlist = ann_pq_adc_topk(spark, sf_dir, k=RERANK_SHORTLIST).select(
+        "query_id", "neighbor_id"
+    )
     return _exact_rerank(e, shortlist)
 
 
@@ -2989,7 +2638,7 @@ def _exact_rerank(
     attach the bounded query vectors the same way, exact-cosine and
     rank. Zero-norm vectors make the rerank cosine undefined (NULL from
     _cosine; NaN in the oracle) — both engines drop the pair, the same
-    degenerate-input contract as _topk (advice r8). ``queries``
+    degenerate-input contract as _bruteforce_score_arrow. ``queries``
     overrides the query-vector relation — any bounded (vec_id, v), the
     multimodal twin's payload-derived vectors; defaults to the corpus
     rows under ``_QUERY_PRED``."""
@@ -3250,7 +2899,7 @@ def _dense_topn(e: DataFrame) -> DataFrame:
         .select("vec_id", "v", _cosine_norm("v").alias("vn"))
         .crossJoin(qv)
         # zero-norm embeddings: undefined cosine (NULL) never enters
-        # the dense list — same contract as the rerank/_topk paths
+        # the dense list — same contract as the rerank/top-k paths
         .filter((F.col("qn") * F.col("vn")) != F.lit(0.0))
         .select(
             F.col("vec_id").alias("doc_id"),
@@ -3938,44 +3587,21 @@ HARD_NEG_POS_BAND = 0.95  # cosine >= this is a near-duplicate, not a negative
     SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {TOP_K}
     """,
 )
-def ann_hard_negatives(
-    spark: SparkSession, sf_dir: str, kernel: str | None = None
-) -> DataFrame:
+def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the
     top-k most-similar corpus vectors AFTER excluding the near-duplicate
     band (cosine >= 0.95 is a positive/duplicate, not a negative — the
     standard 'filter false negatives' step in dense-retrieval training,
     cf. DPR/ANCE). Identical plan posture to ann_topk_bruteforce; the
-    arrow default applies the band cut inside the shared scorer, so
-    excluded positives never enter any sort."""
-    import os as _os
-
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_ANN_KERNEL", "arrow")
+    band cut runs inside the shared scorer, so excluded positives never
+    enter any sort."""
     e = _vectors(spark, sf_dir)
-    if kernel == "arrow":
-        return _topk_window(
-            _bruteforce_score_arrow(
-                e.select("vec_id", "v"),
-                e.filter(F.expr(_QUERY_PRED)),
-                max_cos=HARD_NEG_POS_BAND,
-            )
+    return _topk_window(
+        _bruteforce_score_arrow(
+            e.select("vec_id", "v"),
+            e.filter(F.expr(_QUERY_PRED)),
+            max_cos=HARD_NEG_POS_BAND,
         )
-    q = F.broadcast(e.filter(F.expr(_QUERY_PRED))).alias("q")
-    c = e.alias("c")
-    cos = F.round(_cosine("q.v", "c.v"), 4) + 0.0
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        q.join(c, F.col("q.vec_id") != F.col("c.vec_id"))
-        .select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") < HARD_NEG_POS_BAND)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
     )
 
 
@@ -4124,18 +3750,16 @@ def _ivfpq_oracle(codes_cte: str, coarse_where: str = "") -> str:
     # greens evidence the retired label-cell semantics)
     oracle=_ivfpq_oracle(_PQ_CODES_CTE),
 )
-def ann_ivfpq_topk(
-    spark: SparkSession, sf_dir: str, kernel: str | None = None
-) -> DataFrame:
+def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF+PQ — the production ANN composition (FAISS's IVFPQ): the
     coarse quantizer restricts each query to its nprobe=2 nearest cells,
     and ADC scores ONLY those cells' codes. Per query the scan cost
     drops from O(N) code rows to O(nprobe * N / cells); with the codes
     table cell-partitioned on disk (build_ivfpq_index layout) the probe
-    becomes a literal partition prune. Probes + LUTs ride one bounded
-    broadcast (arrow default: a bounded kernel closure with the probe
-    sets as a membership mask + per-batch partial top-k); the rank
-    window is again the only corpus-sized shuffle.
+    becomes a literal partition prune. Probes + LUTs ride a bounded
+    kernel closure (the probe sets as a membership mask + per-batch
+    partial top-k); the rank window is again the only corpus-sized
+    shuffle.
 
     r16 (VERDICT r15 Next #2): the coarse quantizer is now the
     Lloyd-TRAINED full-dim cell set (``_coarse_train`` — K = |labels| +
@@ -4145,16 +3769,13 @@ def ann_ivfpq_topk(
     IVF on data whose labels don't track the cluster structure (the
     scrambled-label gate in tests/test_ann_quality.py). The PQ codebook
     side is unchanged (r15's in-subspace Lloyd)."""
-    import os as _os
-
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_PQ_KERNEL", "arrow")
     e = _vectors(spark, sf_dir)
     # BOTH quantizers train driver-side on ONE bounded sample collect
     # (r16 review finding 3): the coarse cells (full-dim Lloyd) and
     # the PQ codebook (in-subspace Lloyd) — each a local relation
-    # downstream. The query rows for the arrow path's LUTs ride the
-    # same collect job (_sample_and_query_rows); the probe ranking
-    # stays plan-side over the query RELATION.
+    # downstream. The query rows for the LUTs ride the same collect
+    # job (_sample_and_query_rows); the probe ranking stays plan-side
+    # over the query RELATION.
     samp, qrows = _sample_and_query_rows(e)
     coarse = _coarse_train_rows(samp)
     cvec = _local_df(spark, coarse, _PQ_CB_SCHEMA)
@@ -4169,16 +3790,11 @@ def ann_ivfpq_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("approx_dot_scaled").desc(), F.col("neighbor_id").asc()
     )
-    if kernel == "arrow":
-        scored = _adc_score_arrow(
-            codes.select("vec_id", "label", "bests"),
-            _qlut_rows(qrows, entries),
-            probes=probes,
-        )
-    else:
-        scored = _ivfpq_hof_scored(
-            codes, probes.join(_qlut_expr(q, cb_row), "query_id")
-        )
+    scored = _adc_score_arrow(
+        codes.select("vec_id", "label", "bests"),
+        _qlut_rows(qrows, entries),
+        probes=probes,
+    )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= TOP_K)
@@ -4189,7 +3805,7 @@ def _ivf_probes(q: DataFrame, cvec: DataFrame) -> DataFrame:
     """(query_id, plabel): rank the coarse-quantizer cells per query by
     rounded cosine and keep the nprobe nearest — ONE definition of the
     probe rounding/tie-break shared by the inline and persisted IVFPQ
-    twins, which share an oracle verbatim and must stay bit-identical
+    serves, which share an oracle verbatim and must stay bit-identical
     (r15 review pass 7, finding 1)."""
     wq = Window.partitionBy("query_id").orderBy(
         F.col("ccos").desc(), F.col("clabel").asc()
@@ -4208,43 +3824,13 @@ def _ivf_probes(q: DataFrame, cvec: DataFrame) -> DataFrame:
     )
 
 
-def _ivfpq_hof_scored(codes: DataFrame, probe_lut: DataFrame) -> DataFrame:
-    """The interpreted IVFPQ scoring join — codes x the broadcast
-    (probe, LUT) relation, per-subspace map lookups summed — shared by
-    both twins (same bit-identity requirement as ``_ivf_probes``)."""
-    score = None
-    for m in range(PQ_M):
-        term = F.element_at(F.col("luts")[m], F.col("bests")[m]["code"])
-        score = term if score is None else score + term
-    return (
-        codes.join(F.broadcast(probe_lut), F.col("label") == F.col("plabel"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            score.alias("approx_dot_scaled"),
-        )
-    )
-
-
-def _collect_codebook_entries(spark: SparkSession, codebook_table: str):
-    """The persisted codebook as the sorted (label, vector) entries
-    list the driver-side LUT builder consumes — bounded control-plane
-    data (K = |labels| + PQ_LLOYD_EXTRA rows)."""
-    return sorted(
-        (int(r["label"]), list(r["v"]))
-        for r in spark.table(codebook_table).collect()
-    )
-
-
 def _cb_and_query_rows(
     spark: SparkSession, codebook_table: str, queries: DataFrame
 ) -> tuple[list, list]:
     """The persisted-serve pair of bounded driver-side collects — the
-    codebook entries (``_collect_codebook_entries``'s contract) and the
-    query rows — as ONE ``collect_legs`` job. Content of each half is
-    identical to the two separate collects; entries are sorted
-    driver-side exactly as before."""
+    codebook entries (K = |labels| + PQ_LLOYD_EXTRA rows, as the sorted
+    (label, vector) list the driver-side LUT builder consumes) and the
+    query rows — as ONE ``collect_legs`` job."""
     cb_leg = spark.table(codebook_table).select(
         F.col("label").cast("long").alias("vec_id"),
         F.col("v").cast("array<double>").alias("v"),
@@ -4327,53 +3913,38 @@ def _ivfpq_serve(
     cells_t: str,
     cb_t: str,
     cd_t: str,
-    kernel: str | None = None,
 ) -> DataFrame:
     """The persisted-IVFPQ read path over an already-ensured family —
     shared by the build-once serve and the append-grown serve (one
     definition of the probe/prune/score pipeline, the
     ``_adc_serve`` convention)."""
-    import os as _os
-
-    kernel = kernel or _os.environ.get("SPARK_GRAFT_PQ_KERNEL", "arrow")
     e = _vectors(spark, sf_dir)
     q = e.filter(F.expr(_QUERY_PRED))
     probes = _ivf_probes(q, spark.table(cells_t))
-    # bounded: <= MAX_QUERIES x N_PROBE rows — collected once, feeding
-    # the partition-prune filter, the arrow kernel's per-query masks,
-    # AND the interpreted branch's probe relation (no lineage re-run).
-    # Arrow path: the probe pairs, the codebook entries, and the query
-    # rows are ALL bounded driver-side relations — one collect_legs
-    # job replaces three back-to-back collects (guide §5 driver
-    # round-trips); each leg's content is exactly what its separate
-    # collect produced.
-    if kernel == "arrow":
-        probe_leg = probes.select(
-            F.col("query_id").cast("long").alias("vec_id"),
-            F.col("plabel").cast("long").alias("plabel"),
-            F.lit(None).cast("array<double>").alias("v"),
-        )
-        cb_leg = spark.table(cb_t).select(
-            F.col("label").cast("long").alias("vec_id"),
-            F.lit(None).cast("long").alias("plabel"),
-            F.col("v").cast("array<double>").alias("v"),
-        )
-        q_leg = q.select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            F.lit(None).cast("long").alias("plabel"),
-            F.col("v").cast("array<double>").alias("v"),
-        )
-        probe_raw, cb_rows, qrows = collect_legs(probe_leg, cb_leg, q_leg)
-        probe_rows = [
-            (int(r["vec_id"]), int(r["plabel"])) for r in probe_raw
-        ]
-        entries = sorted(
-            (int(r["vec_id"]), list(r["v"])) for r in cb_rows
-        )
-    else:
-        probe_rows = [
-            (int(r.query_id), int(r.plabel)) for r in probes.collect()
-        ]
+    # the probe pairs (<= MAX_QUERIES x N_PROBE rows, feeding both the
+    # partition-prune filter and the kernel's per-query masks), the
+    # codebook entries and the query rows are ALL bounded driver-side
+    # relations — one collect_legs job replaces three back-to-back
+    # collects (guide §5 driver round-trips); each leg's content is
+    # exactly what its separate collect produced.
+    probe_leg = probes.select(
+        F.col("query_id").cast("long").alias("vec_id"),
+        F.col("plabel").cast("long").alias("plabel"),
+        F.lit(None).cast("array<double>").alias("v"),
+    )
+    cb_leg = spark.table(cb_t).select(
+        F.col("label").cast("long").alias("vec_id"),
+        F.lit(None).cast("long").alias("plabel"),
+        F.col("v").cast("array<double>").alias("v"),
+    )
+    q_leg = q.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.lit(None).cast("long").alias("plabel"),
+        F.col("v").cast("array<double>").alias("v"),
+    )
+    probe_raw, cb_rows, qrows = collect_legs(probe_leg, cb_leg, q_leg)
+    probe_rows = [(int(r["vec_id"]), int(r["plabel"])) for r in probe_raw]
+    entries = sorted((int(r["vec_id"]), list(r["v"])) for r in cb_rows)
     cells = sorted({lab for _, lab in probe_rows})
     # the label-CARRYING tombstone-gated read (_live_codes projects the
     # partition column away for the full-scan serves; the prune needs it)
@@ -4385,18 +3956,11 @@ def _ivfpq_serve(
     w = Window.partitionBy("query_id").orderBy(
         F.col("approx_dot_scaled").desc(), F.col("neighbor_id").asc()
     )
-    if kernel == "arrow":
-        scored = _adc_score_arrow(
-            pruned.select("vec_id", "label", "bests"),
-            _qlut_rows(qrows, entries),
-            probes=probe_rows,
-        )
-    else:
-        qlut = _qlut_expr(q, _codebook_row(spark.table(cb_t)))
-        probe_lut = spark.createDataFrame(
-            probe_rows, "query_id long, plabel long"
-        ).join(qlut, "query_id")
-        scored = _ivfpq_hof_scored(pruned, probe_lut)
+    scored = _adc_score_arrow(
+        pruned.select("vec_id", "label", "bests"),
+        _qlut_rows(qrows, entries),
+        probes=probe_rows,
+    )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= TOP_K)
@@ -4411,9 +3975,7 @@ def _ivfpq_serve(
     # serve is the flagship 100 TB ANN path — tracked round-over-round
     # beside the linear ann_pq_adc_topk it supersedes at scale
 )
-def ann_ivfpq_indexed(
-    spark: SparkSession, sf_dir: str, kernel: str | None = None
-) -> DataFrame:
+def ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``ann_ivfpq_topk`` served from PERSISTED artifacts — the
     production IVFPQ read path (what FAISS serves from a loaded index):
     trained coarse cells, trained PQ codebook, and CELL-PARTITIONED
@@ -4434,7 +3996,7 @@ def ann_ivfpq_indexed(
     cells are Lloyd-TRAINED (VERDICT r15 Next #2), so the prune now
     follows the data's own cluster structure, not the ingest labels."""
     cells_t, cb_t, cd_t = ensure_ivfpq_index(spark, sf_dir)
-    return _ivfpq_serve(spark, sf_dir, cells_t, cb_t, cd_t, kernel)
+    return _ivfpq_serve(spark, sf_dir, cells_t, cb_t, cd_t)
 
 
 def _set_ivfpq_indexed_oracle() -> None:
@@ -5574,9 +5136,7 @@ def ensure_appended_ivfpq_index(
         _PQ_CODES_CTE_FROZEN, f" WHERE {_CORPUS_PRED}"
     ),
 )
-def ann_ivfpq_appended_served(
-    spark: SparkSession, sf_dir: str, kernel: str | None = None
-) -> DataFrame:
+def ann_ivfpq_appended_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVFPQ serve over an APPEND-GROWN family (r16): base build
     from the corpus slice, the held-out batch appended against the
     FROZEN trained cells + FROZEN PQ codebook (``ivfpq_index_append``),
@@ -5589,7 +5149,7 @@ def ann_ivfpq_appended_served(
     posture: new batches land as per-cell appends, no re-encode, no
     retrain, the serve's prune unchanged."""
     cells_t, cb_t, cd_t = ensure_appended_ivfpq_index(spark, sf_dir)
-    return _ivfpq_serve(spark, sf_dir, cells_t, cb_t, cd_t, kernel)
+    return _ivfpq_serve(spark, sf_dir, cells_t, cb_t, cd_t)
 
 
 @query(
@@ -5632,29 +5192,11 @@ def _adc_serve(
     w = Window.partitionBy("query_id").orderBy(
         F.col("approx_dot_scaled").desc(), F.col("neighbor_id").asc()
     )
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_PQ_KERNEL", "arrow") == "arrow":
-        # the persisted codebook is bounded control-plane data — build
-        # the query LUTs driver-side (no per-entry interpreted fold);
-        # codebook + query rows ride one collect (_cb_and_query_rows)
-        entries, qrows = _cb_and_query_rows(spark, codebook_table, queries)
-        scored = _adc_score_arrow(codes, _qlut_rows(qrows, entries), k=k)
-    else:
-        qlut = _qlut_expr(queries, _codebook_row(spark.table(codebook_table)))
-        score = None
-        for m in range(PQ_M):
-            term = F.element_at(F.col("luts")[m], F.col("bests")[m]["code"])
-            score = term if score is None else score + term
-        scored = (
-            codes.crossJoin(F.broadcast(qlut))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                score.alias("approx_dot_scaled"),
-            )
-        )
+    # the persisted codebook is bounded control-plane data — build the
+    # query LUTs driver-side; codebook + query rows ride one collect
+    # (_cb_and_query_rows)
+    entries, qrows = _cb_and_query_rows(spark, codebook_table, queries)
+    scored = _adc_score_arrow(codes, _qlut_rows(qrows, entries), k=k)
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)

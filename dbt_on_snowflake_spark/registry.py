@@ -131,7 +131,7 @@ QUERIES: dict[str, RegisteredQuery] = {}
 #   16 r9-stale rows slip to r13. The computed lowest-risk slip list
 #   (A/B twins, inverse/variant shapes of exported rows, each with a
 #   same-module r12-exported guard):
-#     ann_pq_adc_topk_hof, ann_pq_codes_hof   (kernel A/B twins)
+#     the two PQ kernel A/B twins             (since deleted)
 #     text_unigram_rarity_bcast               (broadcast twin)
 #     text_token_count_bpe                    (superseded by _trained)
 #     corpus_mixture_sample, corpus_mixture_sample_bpe,
@@ -354,12 +354,6 @@ ACTIVE_EXPORT_ROUND = 18
 # guard-slip pool grew 6 -> 16 -> 22 by r12). Map: retired row -> the
 # kept same-module guard that carries its operator family.
 RETIRED_FROM_ROTATION: dict[str, str] = {
-    # kernel A/B twins kept as parity-verified references (left the
-    # bench headline at r15: the Lloyd codebook's K is ~6x larger and
-    # the interpreted evaluator is linear in entries — SCALING.md
-    # records the r15 A/B measurement)
-    "ann_pq_adc_topk_hof": "ann_pq_adc_topk",
-    "ann_pq_codes_hof": "ann_pq_adc_topk",
     # strict substep of the ADC top-k (codes are computed en route)
     "ann_pq_codes": "ann_pq_adc_topk",
     # shares its oracle verbatim with the kept row

@@ -30,34 +30,36 @@ def spark():
 class SparkJobs:
     """What a block launched: job ids, the ids of every stage those jobs
     hold, the names of the stages whose info the status store still
-    keeps, and ``actions`` — the SQL executions (one per DataFrame
-    action, however many AQE stage jobs it splits into) that ran at
-    least one job."""
+    keeps, ``actions`` — the SQL executions (one per DataFrame action,
+    however many AQE stage jobs it splits into) that ran at least one
+    job — and ``plans``, the formatted physical plan of every SQL
+    execution of the block, oldest first (``plans.scans`` parses it)."""
 
     jobs: list[int] = field(default_factory=list)
     stages: list[int] = field(default_factory=list)
     stage_names: list[str] = field(default_factory=list)
     actions: int = 0
+    plans: list[str] = field(default_factory=list)
 
 
-def _sql_actions(spark, group: str) -> int:
-    """SQL executions of job group ``group`` that ran a job. An execution
+def _sql_executions(spark, group: str) -> list:
+    """SQL executions of job group ``group``, newest first. An execution
     takes its description from the job group's, and the block's
     executions are the newest ones, so walk back from the newest until
     the description changes."""
     store = spark._jsparkSession.sharedState().statusStore()
     end = store.executionsCount()
-    actions = 0
+    out = []
     while end > 0:
         start = max(0, end - 64)
         chunk = store.executionsList(start, end - start)
         for i in range(chunk.size() - 1, -1, -1):
             e = chunk.apply(i)
             if e.description() != group:
-                return actions
-            actions += not e.jobs().isEmpty()
+                return out
+            out.append(e)
         end = start
-    return actions
+    return out
 
 
 @contextmanager
@@ -73,7 +75,9 @@ def spark_jobs(spark):
         yield seen
     finally:
         sc.setJobGroup(None, None)
-        seen.actions = _sql_actions(spark, group)
+        executions = _sql_executions(spark, group)
+        seen.actions = sum(not e.jobs().isEmpty() for e in executions)
+        seen.plans = [e.physicalPlanDescription() for e in executions[::-1]]
         tracker = sc.statusTracker()
         for job_id in sorted(tracker.getJobIdsForGroup(group)):
             info = tracker.getJobInfo(job_id)
@@ -85,3 +89,24 @@ def spark_jobs(spark):
                 si = tracker.getStageInfo(s)
                 if si is not None:
                     seen.stage_names.append(si.name)
+
+
+def assert_index_collects(plans: list[str], frozen: str) -> None:
+    """The construction-time collects of an index serve or append (the
+    ``plans`` of a ``spark_jobs`` block): at least one reads the frozen
+    index table whose name contains ``frozen``; none recomputes it (no
+    ``Generate``, the posexplode of centroid/codebook training); and
+    every corpus-parquet scan among them is the bounded query side, its
+    ``vec_id``/``doc_id`` bound pushed to the scan."""
+    from dbt_on_snowflake_spark.plans import scans
+
+    assert plans, "no construction-time collect"
+    assert not [p for p in plans if "Generate" in p]
+    found = [s for p in plans for s in scans(p)]
+    assert any(frozen in s.get("location", "") for s in found), found
+    for s in found:
+        for corpus, key in (("embeddings", "vec_id"), ("documents", "doc_id")):
+            if f"{corpus}.parquet" in s.get("location", ""):
+                assert f"LessThan({key}," in s.get("pushedfilters", ""), (
+                    f"unbounded {corpus} scan: {s}"
+                )

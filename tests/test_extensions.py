@@ -17,7 +17,7 @@ from dbt_on_snowflake_spark.operators.multimodal import (
 from dbt_on_snowflake_spark.operators.analytics import t_events_sessionize
 from dbt_on_snowflake_spark.streaming import t_events_sessions_streaming
 from dbt_on_snowflake_spark.testdata import table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_index_collects, spark_jobs
 
 
 def test_multimodal_decode_matches_python(spark):
@@ -533,152 +533,30 @@ def test_pack_shard_writer_appends_new_shards_only(spark, tmp_path):
     assert key == sorted(key)
 
 
-def test_pq_kernels_agree(spark):
-    """The Arrow-vectorized PQ encode kernel (r8, SCALING.md seam) must
-    be row-for-row identical to the interpreted HOF kernel: same
-    sequential-fold arithmetic, same half-up rounding, same
-    ascending-label tie-break. Any divergence here means the bench A/B
-    compares different answers."""
+def test_pq_encode_empty_codebook(spark):
+    """An empty codebook (empty training input) has no nearest entry:
+    every corpus row encodes to PQ_M NULL ``bests`` entries, an empty
+    corpus to no rows, both under the non-empty encode's schema."""
     from dbt_on_snowflake_spark.operators.similarity import (
-        _centroid_vectors,
-        _codebook_row,
+        PQ_M,
+        _entries_cb_row,
         _pq_encode,
-        _vectors,
     )
 
-    e = _vectors(spark, SF_SMOKE)
-    cb = _codebook_row(_centroid_vectors(e)).localCheckpoint()
-
-    def rows(kernel):
-        out = _pq_encode(e.select("vec_id", "v"), cb, kernel=kernel)
-        return sorted(
-            (r.vec_id, tuple((b["d"], b["code"]) for b in r.bests))
-            for r in out.collect()
-        )
-
-    hof, arrow = rows("hof"), rows("arrow")
-    assert len(hof) > 0
-    assert hof == arrow
-
-
-def test_pq_kernel_selection(spark):
-    """kernel dispatch: env default is 'arrow', explicit values win,
-    unknown names are a clear error."""
-    import pytest as _pytest
-
-    from dbt_on_snowflake_spark.operators.similarity import (
-        _centroid_vectors,
-        _codebook_row,
-        _pq_encode,
-        _vectors,
+    corpus = spark.createDataFrame(
+        [(1, [0.5] * 8), (2, [-0.5] * 8)], "vec_id long, v array<double>"
     )
-
-    e = _vectors(spark, SF_SMOKE)
-    cb = _codebook_row(_centroid_vectors(e))
-    with _pytest.raises(ValueError, match="unknown PQ kernel"):
-        _pq_encode(e.select("vec_id", "v"), cb, kernel="simd")
-
-
-def test_semantic_kernels_agree(spark):
-    """The r8 per-cell vectorized semantic-prune kernel must be
-    row-for-row identical to the r7 join pipeline — same sequential-fold
-    cosines, rounding, (ccos, vec_id) ordering and drop rule."""
-    import hashlib
-
-    from dbt_on_snowflake_spark.operators.similarity import (
-        _semantic_prune,
-        _vectors,
-        build_ann_index,
-    )
-
-    suffix = hashlib.md5(f"semagree:{SF_SMOKE}".encode()).hexdigest()[:8]
-    ct, at = f"ann_centroids_{suffix}", f"ann_assignments_{suffix}"
-    build_ann_index(
-        spark, _vectors(spark, SF_SMOKE),
-        centroids_table=ct, assignments_table=at,
-    )
-
-    def rows(kernel):
-        return sorted(
-            (r.vec_id, r.label, r.ccos, r.kept)
-            for r in _semantic_prune(spark, ct, at, kernel=kernel).collect()
-        )
-
-    hof, arrow = rows("hof"), rows("arrow")
-    assert len(hof) > 0
-    assert hof == arrow
-
-
-def test_ann_bruteforce_kernels_agree(spark):
-    """r8 partial-top-k arrow scorer vs the broadcast-join pipeline:
-    identical row sets — per-batch local top-k must lose nothing the
-    global window would have kept."""
-    from dbt_on_snowflake_spark.operators.similarity import (
-        ann_topk_bruteforce,
-    )
-
-    a = sorted(
-        map(tuple, ann_topk_bruteforce(spark, SF_SMOKE, kernel="arrow").collect())
-    )
-    h = sorted(
-        map(tuple, ann_topk_bruteforce(spark, SF_SMOKE, kernel="hof").collect())
-    )
-    assert len(a) > 0
-    assert a == h
-
-
-def test_ann_family_kernels_agree(spark):
-    """Every exact-cosine ANN shape that gained the shared arrow scorer
-    (single-probe IVF, multiprobe, hard negatives) must be row-identical
-    to its join-pipeline twin — probe masks and the near-duplicate band
-    cut included."""
-    from dbt_on_snowflake_spark.operators.similarity import (
-        ann_hard_negatives,
-        ann_ivf_topk,
-    )
-
-    for fn in (ann_ivf_topk, ann_hard_negatives):
-        a = sorted(map(tuple, fn(spark, SF_SMOKE, kernel="arrow").collect()))
-        h = sorted(map(tuple, fn(spark, SF_SMOKE, kernel="hof").collect()))
-        assert len(a) > 0
-        assert a == h, fn.__name__
-
-
-def test_multiprobe_kernels_agree(spark, monkeypatch):
-    """ann_ivf_multiprobe through both kernels (env-selected: the shared
-    _multiprobe_topk serves the recompute and the persisted-index
-    variants, so this pins both)."""
-    from dbt_on_snowflake_spark.registry import all_queries
-
-    Q = all_queries()
-
-    def rows():
-        return sorted(
-            map(tuple, Q["ann_ivf_multiprobe"].fn(spark, SF_SMOKE).collect())
-        )
-
-    monkeypatch.setenv("SPARK_GRAFT_ANN_KERNEL", "arrow")
-    a = rows()
-    monkeypatch.setenv("SPARK_GRAFT_ANN_KERNEL", "hof")
-    h = rows()
-    assert len(a) > 0
-    assert a == h
-
-
-def test_embedding_pairs_kernels_agree(spark):
-    """dedup_embedding_cosine's per-label pair kernel vs the label
-    self-join: identical pair sets and rounded cosines (threshold on the
-    unrounded value, like the DF filter)."""
-    from dbt_on_snowflake_spark.operators.dedup import dedup_embedding_cosine
-
-    a = sorted(
-        map(tuple, dedup_embedding_cosine(spark, SF_SMOKE, kernel="arrow").collect())
-    )
-    h = sorted(
-        map(tuple, dedup_embedding_cosine(spark, SF_SMOKE, kernel="hof").collect())
-    )
-    assert len(a) > 0
-    assert a == h
+    empty_cb = _entries_cb_row(spark, [])
+    out = _pq_encode(corpus, empty_cb)
+    full = _pq_encode(corpus, _entries_cb_row(spark, [(0, [0.0] * 8)]))
+    assert out.schema == full.schema
+    assert sorted((r.vec_id, r.bests) for r in out.collect()) == [
+        (1, [None] * PQ_M),
+        (2, [None] * PQ_M),
+    ]
+    none = _pq_encode(corpus.limit(0), empty_cb)
+    assert none.schema == full.schema
+    assert none.collect() == []
 
 
 def test_semantic_greedy_vs_relaxation_chain(spark):
@@ -726,42 +604,21 @@ def test_semantic_greedy_vs_relaxation_chain(spark):
     assert relax == {1: True, 2: True, 3: False, 4: False}
 
 
-def test_incremental_assign_kernels_agree(spark, monkeypatch):
-    """ann_incremental_assign through the narrow-map arrow assignment vs
-    the broadcast-join + rank-window pipeline: identical assignments
-    (rounded-cosine argmax, ascending-label tie-break)."""
-    from dbt_on_snowflake_spark.registry import all_queries
-
-    Q = all_queries()
-
-    def rows():
-        return sorted(
-            map(tuple, Q["ann_incremental_assign"].fn(spark, SF_SMOKE).collect())
-        )
-
-    monkeypatch.setenv("SPARK_GRAFT_ANN_KERNEL", "arrow")
-    a = rows()
-    monkeypatch.setenv("SPARK_GRAFT_ANN_KERNEL", "hof")
-    h = rows()
-    assert len(a) > 0
-    assert a == h
-
-
 def test_ann_bruteforce_kernels_agree_on_zero_norm(spark, tmp_path):
-    """advice r8: a zero-norm embedding yields NaN cosine (0/0). Spark
-    orders NaN GREATER than any double under DESC, so pre-fix the hof
-    window ranked the undefined pair FIRST while the arrow kernel's
-    isfinite filter dropped it. Both kernels must now drop degenerate
-    pairs identically — as zero-norm neighbor AND as zero-norm query."""
+    """A zero-norm embedding yields an undefined (0/0) cosine. The
+    kernel must drop degenerate pairs — as zero-norm neighbor AND as
+    zero-norm query — exactly as the registered oracle's NOT isnan
+    guard does, rather than rank them (Spark and DuckDB both order NaN
+    above every double under DESC)."""
     import os
 
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from dbt_on_snowflake_spark.operators.similarity import (
-        ann_topk_bruteforce,
-    )
+    from dbt_on_snowflake_spark.registry import all_queries
+    from dbt_on_snowflake_spark.testdata import TABLES
+    from tests.oracle_harness import compare
 
     rng = np.random.RandomState(7)
     n, dim = 60, 8
@@ -781,15 +638,16 @@ def test_ann_bruteforce_kernels_agree_on_zero_norm(spark, tmp_path):
     sf = str(tmp_path / "zn_sf")
     os.makedirs(sf)
     pq.write_table(tbl, os.path.join(sf, "embeddings.parquet"))
+    for t in TABLES:  # the oracle connection views every table
+        if t != "embeddings":
+            os.symlink(
+                os.path.join(SF_SMOKE, f"{t}.parquet"),
+                os.path.join(sf, f"{t}.parquet"),
+            )
 
-    a = sorted(
-        map(tuple, ann_topk_bruteforce(spark, sf, kernel="arrow").collect())
-    )
-    h = sorted(
-        map(tuple, ann_topk_bruteforce(spark, sf, kernel="hof").collect())
-    )
-    assert len(a) > 0
-    assert a == h
+    q = all_queries()["ann_topk_bruteforce"]
+    assert compare(spark, q.name, q.fn, q.oracle, sf) > 0
+    a = sorted(map(tuple, q.fn(spark, sf).collect()))
     # the zero-norm neighbor never appears; the zero-norm query emits
     # no rows at all (every cosine undefined)
     assert all(r[1] != 3 for r in a)
@@ -891,22 +749,15 @@ def test_mmr_diversifies_vs_plain_topk(spark):
 
 
 def test_ann_filtered_topk_kernels_agree(spark):
-    """Filtered search through both kernels: the candidate-side metadata
-    predicate must restrict the arrow scorer's scan and the hof join
-    identically — row-identical results, and no neighbor outside the
-    filter."""
+    """Filtered search: the candidate-side metadata predicate restricts
+    the scorer's scan — no neighbor outside the filter (row equality
+    with the oracle is the parity replica's always-run row)."""
     from dbt_on_snowflake_spark.operators.similarity import (
         ann_filtered_topk,
     )
 
-    a = sorted(
-        map(tuple, ann_filtered_topk(spark, SF_SMOKE, kernel="arrow").collect())
-    )
-    h = sorted(
-        map(tuple, ann_filtered_topk(spark, SF_SMOKE, kernel="hof").collect())
-    )
+    a = sorted(map(tuple, ann_filtered_topk(spark, SF_SMOKE).collect()))
     assert len(a) > 0
-    assert a == h
     labels = {
         r.vec_id: r.label
         for r in spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -1068,21 +919,14 @@ def test_filtered_indexed_widens_probes(spark, tmp_path):
     On the constructed corpus the fixed-nprobe probe set {2 nearest
     cells} contains no matching vector at all; ann_filtered_indexed
     widens to 4 cells and returns exactly TOP_K rows, every neighbor
-    matching the filter, ranked by exact cosine. Arrow and hof kernels
-    agree row-for-row."""
+    matching the filter, ranked by exact cosine."""
     from dbt_on_snowflake_spark.operators.similarity import (
         TOP_K,
         ann_filtered_indexed,
     )
 
     sf = _filtered_widen_corpus(tmp_path)
-    a = sorted(
-        map(tuple, ann_filtered_indexed(spark, sf, kernel="arrow").collect())
-    )
-    h = sorted(
-        map(tuple, ann_filtered_indexed(spark, sf, kernel="hof").collect())
-    )
-    assert a == h
+    a = sorted(map(tuple, ann_filtered_indexed(spark, sf).collect()))
     assert len(a) == TOP_K  # k filled despite the empty nearest cells
     # every result matches the filter (labels 0/2 hold vec_ids 9..15)
     assert all(r[1] >= 9 for r in a)
@@ -1602,15 +1446,14 @@ def test_ivfpq_index_append_converges_to_frozen_encode(spark):
         _drop_ivfpq(spark, cd_t, cb_t, cells_t)
 
 
-def test_ivfpq_append_no_corpus_reencode_or_retrain(spark, monkeypatch):
+def test_ivfpq_append_no_corpus_reencode_or_retrain(spark):
     """ivfpq_index_append must assign+encode ONLY the batch against
     the persisted FROZEN quantizers: with an in-memory batch, the
-    returned plan reads pq_codebook_ivp_ (hof encode) and nothing from
-    the corpus parquet, with no training stage — at 100 TB an
-    embeddings scan or a posexplode here means the append retrains or
-    re-encodes per batch."""
-    from pyspark.sql import functions as F
-
+    codebook collect reads pq_codebook_ivp_, and neither the
+    construction-time collects, the append's write nor the returned
+    plan reads the corpus parquet or carries a training stage — at
+    100 TB an embeddings scan or a posexplode here means the append
+    retrains or re-encodes per batch."""
     from dbt_on_snowflake_spark.operators.similarity import (
         ivfpq_index_append,
     )
@@ -1622,26 +1465,19 @@ def test_ivfpq_append_no_corpus_reencode_or_retrain(spark, monkeypatch):
             [(100009, 0, [0.1] * 64), (100019, 1, [0.2] * 64)],
             "vec_id long, label long, v array<double>",
         )
-        monkeypatch.setenv("SPARK_GRAFT_PQ_KERNEL", "hof")
-        plan = explain_str(
-            ivfpq_index_append(
-                spark, batch,
-                cells_table=cells_t, codebook_table=cb_t, codes_table=cd_t,
+        with spark_jobs(spark) as seen:
+            plan = explain_str(
+                ivfpq_index_append(
+                    spark, batch,
+                    cells_table=cells_t, codebook_table=cb_t,
+                    codes_table=cd_t,
+                )
             )
-        )
+        assert_index_collects(seen.plans, "pq_codebook_ivp_")
+        assert not [p for p in seen.plans if "embeddings.parquet" in p]
         assert "embeddings.parquet" not in plan  # corpus never re-read
         assert "Generate" not in plan  # posexplode = quantizer retrain
-        assert "pq_codebook_ivp_" in plan  # the frozen codebook encodes
-        monkeypatch.delenv("SPARK_GRAFT_PQ_KERNEL")
-        batch2 = batch.withColumn("vec_id", F.col("vec_id") + 1000)
-        plan_a = explain_str(
-            ivfpq_index_append(
-                spark, batch2,
-                cells_table=cells_t, codebook_table=cb_t, codes_table=cd_t,
-            )
-        )
-        assert "embeddings.parquet" not in plan_a
-        assert "MapInPandas" in plan_a  # arrow assign+encode kernels
+        assert "MapInPandas" in plan  # assign+encode kernels
     finally:
         _drop_ivfpq(spark, cd_t, cb_t, cells_t)
 
@@ -2009,10 +1845,10 @@ def test_ensure_rebuilds_partial_index_family(spark):
     assert spark.catalog.tableExists(asg_t)
 
 
-def test_filtered_rerank_indexed_respects_filter(spark, monkeypatch):
+def test_filtered_rerank_indexed_respects_filter(spark):
     """Every neighbor of the filtered two-stage PQ serve matches the
-    candidate predicate, each query's k is filled from the matching
-    set, and both ADC kernel paths agree row-for-row."""
+    candidate predicate and each query's k is filled from the matching
+    set."""
     from dbt_on_snowflake_spark.operators.similarity import (
         ANN_FILTER_PRED,
         TOP_K,
@@ -2032,10 +1868,6 @@ def test_filtered_rerank_indexed_respects_filter(spark, monkeypatch):
     for r in rows:
         per_q[r.query_id] = per_q.get(r.query_id, 0) + 1
     assert all(n == TOP_K for n in per_q.values())
-
-    monkeypatch.setenv("SPARK_GRAFT_PQ_KERNEL", "hof")
-    hof = ann_filtered_rerank_indexed(spark, SF_SMOKE).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, hof))
 
 
 def test_fingerprint_ttl_cache_and_invalidation(spark, tmp_path, monkeypatch):

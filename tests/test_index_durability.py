@@ -176,40 +176,24 @@ def test_pruned_index_survives_across_sessions(tmp_path):
 
 
 _PQ_SERVE = """
-# Serve ADC for query vec_id=0 purely from the persisted tables: the
-# SAME DataFrame expressions in both sessions, so equal output proves
-# the artifact (not session lineage) carries the state.
+# Serve ADC for a fixed query vector purely from the persisted tables:
+# the SAME serve kernels in both sessions, so equal output proves the
+# artifact (not session lineage) carries the state. query_id -1 matches
+# no vec_id, so every code row is scored.
 from pyspark.sql import functions as F
 from dbt_on_snowflake_spark.operators.similarity import (
-    PQ_M, _codebook_row, _dot_col, _subvec,
+    _adc_score_arrow, _qlut_rows,
 )
-cb_row = _codebook_row(
-    spark.table("pq_durable_cb").select(
-        "label", F.col("v").cast("array<double>").alias("v")
-    )
+entries = sorted(
+    (int(r["label"]), list(r["v"]))
+    for r in spark.table("pq_durable_cb").collect()
 )
+qv = [float(i % 7) for i in range(16)]
 codes = spark.table("pq_durable_codes").select("vec_id", "bests")
-qv = F.array(*[F.lit(float(i % 7)) for i in range(16)])
-def _entry(m, qs):
-    def inner(c):
-        return F.struct(
-            c["label"].alias("k"),
-            F.round(_dot_col(qs, _subvec(c["v"], m)) * 10000)
-            .cast("long").alias("p"))
-    return inner
-luts = []
-for m in range(1, PQ_M + 1):
-    qs = F.slice(qv, (m - 1) * 4 + 1, 4)
-    luts.append(F.map_from_entries(F.transform(F.col("cb"), _entry(m, qs))))
-qlut = spark.range(1).crossJoin(F.broadcast(cb_row)).select(
-    F.array(*luts).alias("luts"))
-score = None
-for m in range(PQ_M):
-    t = F.element_at(F.col("luts")[m], F.col("bests")[m]["code"])
-    score = t if score is None else score + t
-scored = codes.crossJoin(F.broadcast(qlut)).select(
-    "vec_id", score.alias("s")).orderBy(F.col("s").desc(), "vec_id")
-result = [(r.vec_id, r.s) for r in scored.collect()]
+scored = _adc_score_arrow(
+    codes, _qlut_rows([{"vec_id": -1, "v": qv}], entries), k=30
+).orderBy(F.col("approx_dot_scaled").desc(), "neighbor_id")
+result = [(r.neighbor_id, r.approx_dot_scaled) for r in scored.collect()]
 """
 
 

@@ -8,7 +8,7 @@ by default the replica runs a BOUNDED parametrization — every
 driver-EXPORTED query (the exact mirror of this round's gate) plus a
 rotating sample of the rest, seeded by ``registry.ACTIVE_EXPORT_ROUND``
 so successive rounds verify different extra slices. Set
-``SPARK_GRAFT_FULL_PARITY=1`` for the full 177-query replica (the
+``SPARK_GRAFT_FULL_PARITY=1`` for the full 175-query replica (the
 builder runs that before shipping a round; this round's full-registry
 run is logged in OPTIMIZATION_r18.md). The non-parametrized harness
 tests below always run."""
@@ -32,6 +32,27 @@ FULL_PARITY = os.environ.get("SPARK_GRAFT_FULL_PARITY") == "1"
 # OPTIMIZATION_r18.md); the full registry cycles through the samples in
 # ~3 rounds on top of the per-round 50-row driver export
 PARITY_SAMPLE = 40
+# Every vector operator has exactly one evaluator (the Arrow/numpy
+# kernel) and the DuckDB oracle is its only reference, so these rows run
+# on every default pass whatever the export and the sample hold.
+ALWAYS_RUN = {
+    "ann_topk_bruteforce",
+    "ann_ivf_topk",
+    "ann_ivf_multiprobe",
+    "ann_ivf_multiprobe_indexed",
+    "ann_hard_negatives",
+    "ann_filtered_topk",
+    "ann_filtered_indexed",
+    "ann_filtered_rerank_indexed",
+    "ann_incremental_assign",
+    "dedup_embedding_cosine",
+    "dedup_semantic",
+    "dedup_semantic_served",
+    "ann_pq_codes",
+    "ann_pq_adc_topk",
+    "ann_ivfpq_topk",
+    "ann_ivfpq_indexed",
+}
 
 
 def _parity_names() -> list[str]:
@@ -45,7 +66,7 @@ def _parity_names() -> list[str]:
             f"r{ACTIVE_EXPORT_ROUND}:{n}".encode()
         ).hexdigest(),
     )
-    return sorted(exported | set(ranked[:PARITY_SAMPLE]))
+    return sorted(exported | ALWAYS_RUN | set(ranked[:PARITY_SAMPLE]))
 
 # Queries whose BroadcastNestedLoopJoin is a BOUNDED broadcast side by
 # construction (a 1-row collapsed vocabulary, a capped query-vector set,
@@ -67,9 +88,7 @@ _BNLJ_OK = {
     "q11_important_suppliers",  # 1-row global-total-value broadcast
     "ann_recall_eval",  # composes ann_topk_bruteforce's capped query side
     "ann_pq_codes",  # 1-row collapsed codebook broadcast
-    "ann_pq_codes_hof",  # encode-stage A/B twin of ann_pq_codes
     "ann_pq_adc_topk",  # 1-row codebook + capped query-LUT broadcast
-    "ann_pq_adc_topk_hof",  # kernel A/B twin of ann_pq_adc_topk
     "ann_hard_negatives",  # same capped query side as ann_topk_bruteforce
     "ann_pq_recall_eval",  # composes two capped-broadcast retrievals
     "ann_ivfpq_topk",  # 1-row codebook + capped probe/LUT broadcasts

@@ -21,7 +21,7 @@ from dbt_on_snowflake_spark.plans import (
     scan_for,
 )
 from dbt_on_snowflake_spark.registry import all_queries
-from tests.conftest import SF_SMOKE, spark_jobs
+from tests.conftest import SF_SMOKE, assert_index_collects, spark_jobs
 
 Q = all_queries()
 
@@ -80,20 +80,13 @@ def test_topk_is_partial_per_partition(spark):
 
 
 def test_ann_broadcast_query_side(spark):
-    """ANN brute force (arrow default): the bounded query matrix is a
-    driver-side closure and each batch emits only its LOCAL top-k per
-    query — the corpus streams through one narrow map, and the only
-    exchange is the tiny partial-top-k merge window. The 'hof' kernel
-    keeps the broadcast join shape."""
-    from dbt_on_snowflake_spark.operators.similarity import (
-        ann_topk_bruteforce,
-    )
-
+    """ANN brute force: the bounded query matrix is a driver-side
+    closure and each batch emits only its LOCAL top-k per query — the
+    corpus streams through one narrow map, and the only exchange is the
+    tiny partial-top-k merge window."""
     plan = plan_of(spark, "ann_topk_bruteforce")
     assert "MapInPandas" in plan
     assert count_shuffles(plan) <= 1
-    hof = explain_str(ann_topk_bruteforce(spark, SF_SMOKE, kernel="hof"))
-    assert count_broadcast_joins(hof) >= 1 or "BroadcastNestedLoopJoin" in hof
 
 
 @pytest.mark.parametrize(
@@ -161,39 +154,25 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
 
 
 def test_ann_indexed_no_centroid_recompute(spark, monkeypatch):
-    """The index-backed multiprobe query reads centroids + assignments
-    from the persisted tables: no posexplode/Generate (the centroid
-    'training' shape) anywhere in the plan, and every scan of the
-    embeddings parquet is the BOUNDED query side (vec_id predicate pushed
-    to the scan) — the corpus pass comes from the label-partitioned
-    assignments table, not a re-read of the raw embeddings. Checked on
-    the 'hof' kernel whose plan carries every stage; the arrow default
-    (probe sets + query matrix move to bounded fn-build collects) is
-    asserted separately."""
-    monkeypatch.setenv("SPARK_GRAFT_ANN_KERNEL", "hof")
-    df = Q["ann_ivf_multiprobe_indexed"].fn(spark, SF_SMOKE)
-    plan = explain_str(df)
-    assert "Generate" not in plan  # posexplode = centroid recompute
-    assert "ann_centroids_" in plan and "ann_assignments_" in plan
-    from dbt_on_snowflake_spark.plans import scans
+    """The index-backed multiprobe query serves from the persisted
+    tables: its construction-time collects (the query rows and the probe
+    sets) read ann_centroids_ and only the BOUNDED query side of the
+    embeddings parquet, with no posexplode/Generate (the centroid
+    'training' shape); the returned plan is assignments scan -> scoring
+    map -> rank window, never re-reading the raw embeddings."""
+    from dbt_on_snowflake_spark.operators import similarity
 
-    emb_scans = [
-        s for s in scans(plan) if "embeddings.parquet" in s.get("location", "")
-    ]
-    assert emb_scans, "query side should still read the embeddings parquet"
-    for s in emb_scans:
-        assert "vec_id" in s.get("pushedfilters", ""), (
-            f"unbounded embeddings scan: {s}"
-        )
-
-    # arrow default: assignments scan -> scoring map -> rank window;
-    # still no centroid recompute, no embeddings re-read in the plan
-    monkeypatch.delenv("SPARK_GRAFT_ANN_KERNEL")
-    plan_a = explain_str(Q["ann_ivf_multiprobe_indexed"].fn(spark, SF_SMOKE))
-    assert "Generate" not in plan_a
-    assert "ann_assignments_" in plan_a and "MapInPandas" in plan_a
-    assert "embeddings.parquet" not in plan_a
-    assert count_shuffles(plan_a) <= 1
+    fn = Q["ann_ivf_multiprobe_indexed"].fn
+    fn(spark, SF_SMOKE)  # builds the index
+    # the query rebuilds its index on every call; measure the serve alone
+    monkeypatch.setattr(similarity, "build_ann_index", lambda *a, **k: None)
+    with spark_jobs(spark) as seen:
+        plan = explain_str(fn(spark, SF_SMOKE))
+    assert_index_collects(seen.plans, "ann_centroids_")
+    assert "Generate" not in plan
+    assert "ann_assignments_" in plan and "MapInPandas" in plan
+    assert "embeddings.parquet" not in plan
+    assert count_shuffles(plan) <= 1
 
 
 def test_incremental_index_probe_no_index_shuffle(spark):
@@ -569,9 +548,6 @@ _HEADLINE_MAX_SHUFFLES = {
     # verdict Next #3)
 
     "ann_topk_bruteforce": 1,
-    # (the _hof A/B twins left the headline at r15 — the Lloyd
-    # codebook's larger K reads as a regression on the interpreted
-    # evaluator; SCALING.md records the r15 A/B measurement)
     "asof_last_order_before_event": 1,
     "corpus_clean_pipeline": 1,
     "dedup_exact": 1,  # r17 note: MIN(lang) keeps both aggregate
@@ -580,8 +556,8 @@ _HEADLINE_MAX_SHUFFLES = {
     # sf0.1 (fixed dict-job cost vs a scale-dependent sort penalty) —
     # see dedup_exact's docstring for the numbers
     "dedup_minhash_lsh": 4,
-    "dedup_semantic": 4,  # arrow serve kernel: 1 (bound kept for hof)
-    "dedup_semantic_served": 4,  # serve path only, no build (arrow: 1)
+    "dedup_semantic": 1,  # the per-cell prune kernel's groupBy(label)
+    "dedup_semantic_served": 1,  # serve path only, no build
     "j1_orders_denorm": 0,  # all dims broadcast at this SF
     "q17_small_quantity_revenue": 2,
     "q1_pricing_summary": 1,
@@ -621,26 +597,6 @@ def test_pq_encode_corpus_never_shuffled(spark):
     assert count_shuffles(plan) <= 3
 
 
-def test_pq_encode_hof_kernel_stays_broadcast(spark):
-    """kernel='hof' keeps the broadcast-codebook crossJoin shape — the
-    interpreted A/B reference must not silently pick up a shuffle."""
-    from dbt_on_snowflake_spark.operators.similarity import (
-        _centroid_vectors,
-        _codebook_row,
-        _pq_encode,
-        _vectors,
-    )
-
-    e = _vectors(spark, SF_SMOKE)
-    df = _pq_encode(
-        e.select("vec_id", "v"), _codebook_row(_centroid_vectors(e)),
-        kernel="hof",
-    )
-    plan = explain_str(df)
-    assert "BroadcastNestedLoopJoin" in plan  # bounded 1-row build side
-    assert "MapInPandas" not in plan
-
-
 def test_pq_adc_only_ranking_shuffle_touches_scores(spark):
     """ann_pq_adc_topk (arrow default): codes come off the narrow Arrow
     encode map and the ADC scoring is a second narrow map (the bounded
@@ -651,16 +607,6 @@ def test_pq_adc_only_ranking_shuffle_touches_scores(spark):
     assert plan.count("MapInPandas") >= 2  # encode + ADC scoring kernels
     # the codebook is checkpointed (one centroid pass, shared by encode
     # and LUT sides); only the per-query rank window shuffles
-    assert count_shuffles(plan) <= 1
-    assert "CartesianProduct" not in plan
-
-
-def test_pq_adc_hof_keeps_broadcast_shape(spark):
-    """The all-interpreted A/B twin keeps the broadcast-LUT crossJoin —
-    its plan must not silently pick up a corpus shuffle either."""
-    plan = plan_of(spark, "ann_pq_adc_topk_hof")
-    assert "BroadcastNestedLoopJoin" in plan  # LUT side
-    assert "MapInPandas" not in plan
     assert count_shuffles(plan) <= 1
     assert "CartesianProduct" not in plan
 
@@ -679,38 +625,23 @@ def test_quality_classifier_is_shuffle_free(spark):
     assert "Generate" not in plan  # no explode
 
 
-def test_pq_indexed_no_encode_recompute(spark, monkeypatch):
+def test_pq_indexed_no_encode_recompute(spark):
     """The persisted-index ADC query serves from pq_codebook_/pq_codes_
-    tables: no posexplode (centroid training) and no per-corpus-row
-    distance argmin in the plan — the only embeddings-parquet scan is
-    the bounded query side. Checked on the 'hof' kernel, whose plan
-    carries every stage (the arrow kernel moves the bounded codebook/
-    query-LUT reads to fn-build time, so its RETURNED plan is just the
-    codes scan + scoring map — asserted separately below)."""
-    monkeypatch.setenv("SPARK_GRAFT_PQ_KERNEL", "hof")
-    df = Q["ann_pq_adc_indexed"].fn(spark, SF_SMOKE)
-    plan = explain_str(df)
-    assert "Generate" not in plan  # posexplode = centroid recompute
-    assert "pq_codebook_" in plan and "pq_codes_" in plan
-    from dbt_on_snowflake_spark.plans import scans
+    tables: its construction-time collect reads the frozen codebook and
+    only the BOUNDED query side of the embeddings parquet, with no
+    posexplode (centroid training); the returned plan is codes scan ->
+    scoring map -> rank window — no per-corpus-row distance argmin, no
+    embeddings re-read."""
+    from dbt_on_snowflake_spark.operators.similarity import ensure_pq_index
 
-    emb_scans = [
-        s for s in scans(plan) if "embeddings.parquet" in s.get("location", "")
-    ]
-    assert emb_scans, "query side should still read the embeddings parquet"
-    for s in emb_scans:
-        assert "vec_id" in s.get("pushedfilters", ""), (
-            f"unbounded embeddings scan: {s}"
-        )
-
-    # arrow default: the returned plan is codes scan -> scoring map ->
-    # rank window; still no centroid recompute, no embeddings re-read
-    monkeypatch.delenv("SPARK_GRAFT_PQ_KERNEL")
-    plan_a = explain_str(Q["ann_pq_adc_indexed"].fn(spark, SF_SMOKE))
-    assert "Generate" not in plan_a
-    assert "pq_codes_" in plan_a and "MapInPandas" in plan_a
-    assert "embeddings.parquet" not in plan_a
-    assert count_shuffles(plan_a) <= 1
+    ensure_pq_index(spark, SF_SMOKE)  # build outside the measured block
+    with spark_jobs(spark) as seen:
+        plan = explain_str(Q["ann_pq_adc_indexed"].fn(spark, SF_SMOKE))
+    assert_index_collects(seen.plans, "pq_codebook_")
+    assert "Generate" not in plan
+    assert "pq_codes_" in plan and "MapInPandas" in plan
+    assert "embeddings.parquet" not in plan
+    assert count_shuffles(plan) <= 1
 
 
 def test_ivfpq_indexed_prunes_to_probed_cells(spark):
@@ -737,17 +668,14 @@ def test_ivfpq_indexed_prunes_to_probed_cells(spark):
     assert count_shuffles(plan) <= 1  # rank window only
 
 
-def test_pq_append_no_corpus_reencode(spark, monkeypatch):
+def test_pq_append_no_corpus_reencode(spark):
     """pq_index_append must encode ONLY the batch against the persisted
-    frozen codebook: with an in-memory batch, the returned encode plan
-    reads pq_codebook_ and nothing from the corpus parquet, and carries
-    no centroid-training stage — at 100 TB, an embeddings scan or a
-    posexplode here means the append re-encodes the corpus per batch
-    (r10 verdict Missing #2). Checked on the 'hof' kernel whose plan
-    carries every stage, then on the arrow default."""
+    frozen codebook: with an in-memory batch, the codebook collect reads
+    pq_codebook_, and neither that collect, the append's write nor the
+    returned encode plan reads the corpus parquet or carries a
+    centroid-training stage — at 100 TB, an embeddings scan or a
+    posexplode here means the append re-encodes the corpus per batch."""
     import hashlib
-
-    from pyspark.sql import functions as F
 
     from dbt_on_snowflake_spark.operators.similarity import (
         _CORPUS_PRED,
@@ -770,21 +698,17 @@ def test_pq_append_no_corpus_reencode(spark, monkeypatch):
         [(100009, 0, [0.1] * 64), (100019, 1, [0.2] * 64)],
         "vec_id long, label long, v array<double>",
     )
-    monkeypatch.setenv("SPARK_GRAFT_PQ_KERNEL", "hof")
-    plan = explain_str(
-        pq_index_append(spark, batch, codebook_table=cb_t, codes_table=cd_t)
-    )
+    with spark_jobs(spark) as seen:
+        plan = explain_str(
+            pq_index_append(
+                spark, batch, codebook_table=cb_t, codes_table=cd_t
+            )
+        )
+    assert_index_collects(seen.plans, "pq_codebook_")
+    assert not [p for p in seen.plans if "embeddings.parquet" in p]
     assert "embeddings.parquet" not in plan  # corpus never re-read
     assert "Generate" not in plan  # posexplode = centroid retraining
-    assert "pq_codebook_" in plan  # the frozen codebook is the encoder
-
-    monkeypatch.delenv("SPARK_GRAFT_PQ_KERNEL")
-    batch2 = batch.withColumn("vec_id", F.col("vec_id") + 1000)
-    plan_a = explain_str(
-        pq_index_append(spark, batch2, codebook_table=cb_t, codes_table=cd_t)
-    )
-    assert "embeddings.parquet" not in plan_a
-    assert "MapInPandas" in plan_a  # arrow encode kernel
+    assert "MapInPandas" in plan  # the encode kernel
 
 
 def test_semantic_served_steady_state_no_corpus_read(spark):
@@ -812,37 +736,39 @@ def test_semantic_served_steady_state_no_corpus_read(spark):
     assert len(stage_names) <= 4, stage_names
 
 
-def test_multimodal_indexed_no_brute_scan(spark, monkeypatch):
+def test_multimodal_indexed_no_brute_scan(spark):
     """multimodal_embed_topk_indexed must SERVE from the persisted PQ
     index: stage 1 scores pq_codes_, not the embeddings floats (the
-    brute twin's corpus cross-score), and nothing in the plan retrains
-    the codebook or re-encodes the corpus. The embeddings parquet
-    appears exactly once — the rerank's shortlist vector gather
-    (r10 verdict Missing #3). Checked on the 'hof' kernel whose plan
-    carries every stage."""
+    brute twin's corpus cross-score), and nothing retrains the codebook
+    or re-encodes the corpus. The construction-time collect reads the
+    frozen codebook and the BOUNDED documents query side (payload ->
+    embedding); the embeddings parquet appears exactly once — the
+    rerank's shortlist vector gather in the returned plan."""
     from dbt_on_snowflake_spark.operators.similarity import ensure_pq_index
-
-    ensure_pq_index(spark, SF_SMOKE)  # build outside the measured plan
-    monkeypatch.setenv("SPARK_GRAFT_PQ_KERNEL", "hof")
-    df = Q["multimodal_embed_topk_indexed"].fn(spark, SF_SMOKE)
-    plan = explain_str(df)
-    assert "pq_codebook_" in plan and "pq_codes_" in plan
-    assert "Generate" not in plan  # posexplode = centroid retraining
     from dbt_on_snowflake_spark.plans import scans
 
+    ensure_pq_index(spark, SF_SMOKE)  # build outside the measured block
+    with spark_jobs(spark) as seen:
+        plan = explain_str(
+            Q["multimodal_embed_topk_indexed"].fn(spark, SF_SMOKE)
+        )
+    assert_index_collects(seen.plans, "pq_codebook_")
+    assert "pq_codes_" in plan
+    assert "Generate" not in plan  # posexplode = centroid retraining
     emb_scans = [
-        s for s in scans(plan) if "embeddings.parquet" in s.get("location", "")
+        s
+        for p in seen.plans + [plan]
+        for s in scans(p)
+        if "embeddings.parquet" in s.get("location", "")
     ]
     assert len(emb_scans) == 1, (
         f"expected ONLY the rerank gather to read embeddings, got "
         f"{len(emb_scans)} scans"
     )
-    # the query side reads documents (payload -> embedding), bounded
-    doc_scans = [
-        s for s in scans(plan) if "documents.parquet" in s.get("location", "")
-    ]
-    assert doc_scans and all(
-        "doc_id" in s.get("pushedfilters", "") for s in doc_scans
+    assert all(
+        "LessThan(doc_id," in s.get("pushedfilters", "")
+        for s in scans(plan)
+        if "documents.parquet" in s.get("location", "")
     )
 
 
@@ -907,7 +833,7 @@ def test_semantic_serve_arrow_single_shuffle(spark):
         spark, _vectors(spark, SF_SMOKE),
         centroids_table=ct, assignments_table=at,
     )
-    plan = explain_str(_semantic_prune(spark, ct, at, kernel="arrow"))
+    plan = explain_str(_semantic_prune(spark, ct, at))
     assert "FlatMapGroupsInPandas" in plan
     assert count_shuffles(plan) <= 1
 

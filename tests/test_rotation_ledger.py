@@ -109,8 +109,6 @@ FAMILY_GUARD_SLIPS = {
 # r12 slips (guards exported in R12_EXPORT): A/B twins and
 # inverse/variant shapes of exported rows, per the registry ledger.
 FAMILY_GUARD_SLIPS.update({
-    "ann_pq_adc_topk_hof": "ann_pq_adc_indexed",
-    "ann_pq_codes_hof": "ann_pq_adc_appended",
     "text_unigram_rarity_bcast": "text_unigram_rarity",
     "text_token_count_bpe": "text_unigram_rarity",
     "corpus_mixture_sample": "corpus_token_budget",
