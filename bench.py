@@ -30,7 +30,12 @@ serialization moved:
   and executor CPU time is the only noise-stable wall proxy on this VM
   (same-HEAD wall swings 1.38x same-day; CPU does not — r17 session-2
   audit). ``cpu_s`` is min-of-3 of the summed ``executorCpuTime`` over
-  each timed run's job-group stages (VERDICT r17 Next #9).
+  each timed run's job-group stages (VERDICT r17 Next #9). It counts
+  executor task CPU only, not the JVM's JIT compiler threads.
+  The line also describes the run itself: ``cpus`` (the session's
+  ``defaultParallelism``), ``master`` and ``jit_ms`` (the JVM's total
+  JIT compilation time when the timing rounds end). ``stdout_record``
+  assembles it.
 - STDERR carries one JSON detail line with the full per-run arrays
   (``runs``, interleaved order), the by-name dicts for stages/cpu, and
   the per-run CPU readings — everything the old oversized stdout line
@@ -81,6 +86,34 @@ def _group_cpu_ns(sc, tracker, store, group: str) -> int:
     return total
 
 
+def stdout_record(
+    timings: dict[str, float],
+    stages: dict[str, int],
+    cpu: dict[str, float],
+    sf: str,
+    *,
+    cpus: int,
+    master: str,
+    jit_ms: int,
+) -> dict:
+    """The compact STDOUT record: totals plus per-query arrays aligned
+    with sorted(timings), and the run's own description."""
+    names = sorted(timings)
+    return {
+        "metric": "headline_queries_total_time",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": {n: timings[n] for n in names},
+        # aligned with sorted(queries) — see module docstring
+        "stages": [stages[n] for n in names],
+        "cpu_s": [cpu[n] for n in names],
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": cpus,
+        "master": master,
+        "jit_ms": jit_ms,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -129,9 +162,12 @@ def main() -> None:
                 round(_group_cpu_ns(sc, tracker, store, group) / 1e9, 3)
             )
 
+    jit_ms = (
+        sc._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+        .getTotalCompilationTime()
+    )
     timings = {n: min(r) for n, r in runs.items()}
     cpu = {n: min(r) for n, r in cpu_runs.items()}
-    total = round(sum(timings.values()), 3)
     print(
         json.dumps(
             {
@@ -146,16 +182,15 @@ def main() -> None:
     )
     print(
         json.dumps(
-            {
-                "metric": "headline_queries_total_time",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                # aligned with sorted(queries) — see module docstring
-                "stages": [stages[n] for n in names],
-                "cpu_s": [cpu[n] for n in names],
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            }
+            stdout_record(
+                timings,
+                stages,
+                cpu,
+                sf,
+                cpus=sc.defaultParallelism,
+                master=sc.master,
+                jit_ms=jit_ms,
+            )
         )
     )
 

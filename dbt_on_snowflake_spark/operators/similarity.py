@@ -568,18 +568,22 @@ def ann_ivf_multiprobe_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast) query-vector filter; no centroid recomputation anywhere
     (plan-pinned by ``test_ann_indexed_no_centroid_recompute``). Shares
     the recompute path's oracle: persisting the index must not change a
-    single result row."""
-    import hashlib
+    single result row. Index built once on first call under a
+    fingerprinted suffix (the ``ann_filtered_indexed`` convention);
+    serving is pure index reads after that."""
+    from dbt_on_snowflake_spark.testdata import index_suffix
 
-    suffix = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    suffix = index_suffix(spark, sf_dir, "mpidx", "embeddings", algo=ANN_ALGO)
     centroids_table = f"ann_centroids_{suffix}"
     assignments_table = f"ann_assignments_{suffix}"
     e = _vectors(spark, sf_dir)
-    build_ann_index(
+    ensure_ann_index(
         spark,
         e,
         centroids_table=centroids_table,
         assignments_table=assignments_table,
+        job_group="ann_ivf_multiprobe_indexed",
+        gc_suffix=suffix,
     )
     q = F.broadcast(e.filter(F.expr(_QUERY_PRED))).alias("q")
     cvec = spark.table(centroids_table)

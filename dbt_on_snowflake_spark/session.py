@@ -5,6 +5,23 @@ same logical plans survive a 1000-executor cluster: AQE re-plans at runtime
 (coalesces small shuffle partitions, converts to broadcast joins, splits
 skewed partitions), timestamps are pinned to UTC for oracle comparability,
 and Arrow is enabled for any Pandas-UDF path.
+
+JIT policy: the session JVM compiles with C1 only
+(``-XX:TieredStopAtLevel=1``). The engine's sessions are short-lived —
+a dbt run, its source tests, an index build or a bench pass — and in a
+fresh JVM most of the CPU goes to C2, HotSpot's optimising compiler,
+compiling Spark's own code and the generated classes rather than to the
+queries. C1 compiles quickly and stops there; the price is slower hot
+code, so long executor-heavy sessions can lose wall time (SCALING.md,
+"JIT policy"). Stopping at C1 also shrinks the default code cache from
+240 MB to 48 MB, where the sweeper evicts compiled code that C1 then
+compiles again, so ``-XX:ReservedCodeCacheSize=240m`` restores the
+tiered default. Results do not depend on the compiler: since JDK 17 all
+floating-point arithmetic is strict (JEP 306), so C1 and C2 code give
+bit-identical values. The flags go in ``spark.driver.extraJavaOptions``
+only: in local mode the driver JVM is also the executor, so that one
+string covers the whole engine; cluster executors take
+``spark.executor.extraJavaOptions``, which is left at its default.
 """
 
 from __future__ import annotations
@@ -23,9 +40,14 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. Shuffle partitions
-    default to ~cores for local mode — at cluster scale this knob (or AQE's
+    default to ``max(cpus, 8)`` — at cluster scale this knob (or AQE's
     ``advisoryPartitionSizeInBytes``) sizes partitions to fit executor
     memory; the default 200 is wrong in both directions.
+
+    The driver JVM starts with the module's JIT policy (C1 only, 240 MB
+    code cache) and the Derby home next to the warehouse. A session
+    that already exists is returned as it is: JVM options apply only to
+    the JVM this call launches.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 4
@@ -69,6 +91,9 @@ def get_spark(
         )
         .config(
             "spark.driver.extraJavaOptions",
+            # C1-only JIT with the tiered-default code cache: see the
+            # module docstring
+            "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m "
             "-Dderby.system.home="
             + os.environ.get(
                 "SPARK_DERBY_DIR",

@@ -4,6 +4,7 @@ LSH recall against exact Jaccard."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbt_on_snowflake_spark.operators.dedup import (
@@ -604,12 +605,14 @@ def test_semantic_greedy_vs_relaxation_chain(spark):
     assert relax == {1: True, 2: True, 3: False, 4: False}
 
 
-def test_ann_bruteforce_kernels_agree_on_zero_norm(spark, tmp_path):
+@pytest.mark.parametrize("name", ["ann_topk_bruteforce", "ann_filtered_topk"])
+def test_topk_drops_zero_norm(spark, tmp_path, name):
     """A zero-norm embedding yields an undefined (0/0) cosine. The
-    kernel must drop degenerate pairs — as zero-norm neighbor AND as
-    zero-norm query — exactly as the registered oracle's NOT isnan
-    guard does, rather than rank them (Spark and DuckDB both order NaN
-    above every double under DESC)."""
+    brute-force and filtered top-k kernels must drop degenerate pairs —
+    as zero-norm neighbor AND as zero-norm query — exactly as their
+    registered oracles' NOT isnan guard does, rather than rank them
+    (Spark and DuckDB both order NaN above every double under DESC, so
+    without the guard the oracle would seat the undefined pair first)."""
     import os
 
     import numpy as np
@@ -645,14 +648,14 @@ def test_ann_bruteforce_kernels_agree_on_zero_norm(spark, tmp_path):
                 os.path.join(sf, f"{t}.parquet"),
             )
 
-    q = all_queries()["ann_topk_bruteforce"]
+    q = all_queries()[name]
     assert compare(spark, q.name, q.fn, q.oracle, sf) > 0
-    a = sorted(map(tuple, q.fn(spark, sf).collect()))
+    a = q.fn(spark, sf).collect()
     # the zero-norm neighbor never appears; the zero-norm query emits
     # no rows at all (every cosine undefined)
-    assert all(r[1] != 3 for r in a)
-    assert all(r[0] != 50 for r in a)
-    assert any(r[0] == 0 for r in a)  # the healthy query still answers
+    assert all(r.neighbor_id != 3 for r in a)
+    assert all(r.query_id != 50 for r in a)
+    assert any(r.query_id == 0 for r in a)  # the healthy query still answers
 
 
 def test_pq_rerank_exact_over_shortlist(spark):
@@ -804,70 +807,6 @@ def test_rerank_and_hybrid_drop_zero_norm(spark, tmp_path):
     assert len(rows) > 0
     assert all(r.neighbor_id != 3 for r in rows)
     assert all(r.query_id != 50 for r in rows)
-
-
-def test_oracle_topk_drops_zero_norm(spark, tmp_path):
-    """Oracle-side half of the degenerate-input contract (r9 advice,
-    similarity.py:64): _ORACLE_TOPK's consumers (brute-force and
-    filtered top-k) must agree with the engine on a corpus CONTAINING a
-    zero-norm embedding — DuckDB ranks the NaN cosine above every
-    finite value under DESC, so without the NOT isnan guard the oracle
-    would seat the undefined pair first while the engine drops it."""
-    import os
-
-    import duckdb
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dbt_on_snowflake_spark.registry import all_queries
-
-    rng = np.random.RandomState(13)
-    n, dim = 60, 8
-    vecs = rng.uniform(-1.0, 1.0, size=(n, dim)).astype(np.float32)
-    vecs[3] = 0.0   # zero-norm neighbor
-    vecs[50] = 0.0  # zero-norm query
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(range(n), pa.int64()),
-            "embedding": pa.array(
-                [list(map(float, v)) for v in vecs],
-                pa.list_(pa.float32()),
-            ),
-            "label": pa.array([i % 4 for i in range(n)], pa.int32()),
-        }
-    )
-    sf = str(tmp_path / "zn_oracle")
-    os.makedirs(sf)
-    pq.write_table(tbl, os.path.join(sf, "embeddings.parquet"))
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{os.path.join(sf, 'embeddings.parquet')}')"
-    )
-    qs = all_queries()
-    try:
-        for name in ("ann_topk_bruteforce", "ann_filtered_topk"):
-            q = qs[name]
-            sdf = q.fn(spark, sf)
-            cols = sorted(sdf.columns, key=str.lower)
-            engine = sorted(
-                tuple(r[c] for c in cols) for r in sdf.collect()
-            )
-            odf = con.execute(q.oracle).fetchdf()
-            oracle = sorted(
-                tuple(row)
-                for row in odf[sorted(odf.columns, key=str.lower)]
-                .itertuples(index=False)
-            )
-            assert len(engine) > 0, name
-            assert engine == oracle, name
-            # cols sorted: (cosine, neighbor_id, query_id, rank)
-            assert all(r[1] != 3 for r in engine), name   # neighbor_id
-            assert all(r[2] != 50 for r in engine), name  # query_id
-    finally:
-        con.close()
 
 
 def _filtered_widen_corpus(tmp_path):

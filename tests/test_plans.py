@@ -164,8 +164,11 @@ def test_ann_indexed_no_centroid_recompute(spark, monkeypatch):
 
     fn = Q["ann_ivf_multiprobe_indexed"].fn
     fn(spark, SF_SMOKE)  # builds the index
-    # the query rebuilds its index on every call; measure the serve alone
-    monkeypatch.setattr(similarity, "build_ann_index", lambda *a, **k: None)
+    # the warm serve must never reach the build
+    def no_rebuild(*a, **k):
+        raise AssertionError("warm serve rebuilt the persisted index")
+
+    monkeypatch.setattr(similarity, "build_ann_index", no_rebuild)
     with spark_jobs(spark) as seen:
         plan = explain_str(fn(spark, SF_SMOKE))
     assert_index_collects(seen.plans, "ann_centroids_")
