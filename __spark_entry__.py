@@ -51,12 +51,15 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 / §7.5.
+    """This round's driver export: at most ``DRIVER_BUDGET`` (50) queries.
 
-    Exports the curated driver set (<= 50 — the per-round check budget) so
-    every exported query gets a CORRECTNESS row every round; near-duplicate
-    shapes register with driver=False and are verified by the local parity
-    replica (tests/test_oracle_parity.py) over the full registry instead.
+    ``registry.driver_export`` picks them from the committed
+    ``CORRECTNESS_r*.json`` files: first every query of the rotation pool
+    never driver-green or last green three or more rounds ago, then the
+    rest by oldest green round (``PRIORITY`` rows lead each group), so
+    each pool query gets a fresh driver row at least every three rounds.
+    Every registered query, exported or not, is hash-compared against
+    DuckDB by tests/test_oracle_parity.py.
     """
 
     def wrap(fn):

@@ -1,58 +1,36 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line on STDOUT: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "stages": [...], "cpu_s": [...], "sf": ...}.
+"""Benchmark harness: the headline queries (``headline=True`` in the
+registry) at $SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata directory)
+on local[$SPARK_GRAFT_CPUS]. Each run executes the whole plan into the
+noop sink: full distributed execution, no driver-side collect.
 
-Execution uses the noop sink — full distributed execution of every plan,
-no driver-side collect.
+Protocol. One warm pass runs every query once (JIT, file listing and any
+``ensure_*`` index build happen here, under the index builds' own job
+groups), then three timing rounds run every query once each, INTERLEAVED
+round-robin: run 1 of every query, then run 2 of every query, then run 3.
+A query's time is the minimum of its three runs. Interleaving matters on
+a shared VM: contention spikes last seconds, so back-to-back runs of one
+query can all land in the same spike, while round-robin spreads a spike
+over single runs of different queries, which the minimum then discards.
 
-Timing protocol: min-of-3 with the 3 runs INTERLEAVED round-robin across
-queries (run 1 of every query, then run 2 of every query, ...). The
-sandbox VM shows multi-x contention spikes lasting seconds; back-to-back
-triples let one spike poison all three of a query's runs (r5's q17
-triple 5.2/4.2/4.8 vs 1.1 on quiet hardware), while round-robin spreads
-a spike across different queries' single runs — exactly what min-of-3
-is meant to absorb.
+STDOUT carries exactly one compact JSON line (``stdout_record``; about
+1.3 KB for 26 queries, so it survives a 2 KB tail capture):
+``metric``, ``value`` (the sum of the per-query minima, seconds),
+``unit``, ``queries`` (name -> seconds), ``sf``, and the run's own
+description: ``cpus`` (the session's ``defaultParallelism``), ``master``
+and ``jit_ms`` (the JVM's total JIT compilation time when the timing
+rounds end). ``stages`` and ``cpu_s`` are arrays aligned with
+``sorted(queries)``:
 
-Output format (r18 measurement-bug fix, VERDICT r17 "What's wrong" #2):
-the r16/r17 records embedded the per-run arrays and per-query stage
-dicts INSIDE the stdout line, which grew past the driver's bounded tail
-capture and cut the line's FRONT — BENCH_r16 became unparseable and the
-automated round-over-round comparison was lost. The timing loop, query
-set, env contract and min-of-3 numbers are UNCHANGED; only the
-serialization moved:
+- ``stages[i]``: stages the query scheduled in the warm pass, counted
+  through its job group, a noise-free plan-shape fingerprint.
+- ``cpu_s[i]``: the minimum over the three timed runs of the summed
+  ``executorCpuTime`` of the run's job-group stages. It counts executor
+  task CPU only: not driver-side Python, not the JVM's JIT compiler
+  threads, not stages skipped by AQE reuse.
 
-- STDOUT carries exactly one compact JSON line (~1.3 KB for 26 queries —
-  always complete inside a 2 KB tail). ``stages`` and ``cpu_s`` are
-  arrays ALIGNED WITH sorted(queries) — i.e. stages[i]/cpu_s[i] belong
-  to sorted(queries.keys())[i] — kept inline because the stage count is
-  the noise-free plan fingerprint that was decisive in the r17 verdict,
-  and executor CPU time is the only noise-stable wall proxy on this VM
-  (same-HEAD wall swings 1.38x same-day; CPU does not — r17 session-2
-  audit). ``cpu_s`` is min-of-3 of the summed ``executorCpuTime`` over
-  each timed run's job-group stages (VERDICT r17 Next #9). It counts
-  executor task CPU only, not the JVM's JIT compiler threads.
-  The line also describes the run itself: ``cpus`` (the session's
-  ``defaultParallelism``), ``master`` and ``jit_ms`` (the JVM's total
-  JIT compilation time when the timing rounds end). ``stdout_record``
-  assembles it.
-- STDERR carries one JSON detail line with the full per-run arrays
-  (``runs``, interleaved order), the by-name dicts for stages/cpu, and
-  the per-run CPU readings — everything the old oversized stdout line
-  held, and more, for the BENCH_SELF_r{N} records.
-
-Stage counts are captured via job groups + statusTracker during the warm
-pass (JIT + file listing + ensure_* index builds run there, under the
-builders' OWN job groups, so serve-path-only counts are preserved).
-
-Noise-protocol rule (r17, VERDICT r16 Next #6): `dedup_semantic_served`
-is a 4-stage persisted serve whose driver-window readings have run
-1.7-1.8 s for three consecutive rounds while same-HEAD quiet runs sit
-at 0.43-0.56 s — its driver number is NOISE-DOMINATED by construction
-(sub-second serve, multi-second co-tenancy spikes). Its authoritative
-cross-round record is the min-of-5 quiet reading in BENCH_SELF_r{N}
-(SCALING.md noise table carries the per-round column); judge/driver
-comparisons should cite that table, not re-derive the attribution.
+STDERR carries one JSON detail line: every run's time in interleaved
+order (``runs``), ``stages_by_name``, ``cpu_s_by_name`` and every run's
+CPU reading (``cpu_runs``).
 """
 
 from __future__ import annotations

@@ -367,7 +367,6 @@ def _empty_scan_grand_total(source: DataFrame, aggs, select_cols) -> DataFrame:
 # reference; noted available in SURVEY §2.4).
 @query(
     "a_rollup_revenue",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     SELECT r.r_name AS region_name,
            n.n_name AS nation_name,
@@ -553,7 +552,6 @@ def a_pivot_status_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # beyond the upstream aggregate); DuckDB mirrors with UNPIVOT.
 @query(
     "a_unpivot_status_revenue",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH wide AS (
         SELECT o_orderpriority AS priority,
@@ -836,7 +834,6 @@ def t_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (cohort = first activity day; how many users return k days later).
 @query(
     "t_user_retention",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle="""
     WITH activity AS (
         SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
@@ -1120,7 +1117,6 @@ def q20_heavy_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed-state partial+final pair with no group key (one row out).
 @query(
     "q6_forecast_revenue_delta",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=f"""
     SELECT {sum_scaled_sql(
         "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
@@ -1158,7 +1154,6 @@ def q6_forecast_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TakeOrderedAndProject with custkey tie-break.
 @query(
     "q10_returned_item_losers",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=f"""
     WITH ranked AS (
         SELECT c.c_custkey AS cust_key, c.c_name AS cust_name,
@@ -1211,7 +1206,6 @@ def q10_returned_item_losers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact integer-scaled ratio surfaced as one double.
 @query(
     "q14_promo_revenue_share",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle="""
     SELECT CAST(100.0 * SUM(CASE WHEN p.p_type = 'PROMO'
                    THEN CAST(ROUND(l.l_extendedprice * 100) AS BIGINT)
@@ -1252,7 +1246,6 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this stays a hash join with a residual condition, never a cartesian.
 @query(
     "q19_branded_quantity_revenue",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=f"""
     SELECT {sum_scaled_sql(
         "CAST(ROUND(l.l_extendedprice * 100) AS BIGINT)"
@@ -1307,7 +1300,6 @@ def q19_branded_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate is low-cardinality (|event_types|^2 groups).
 @query(
     "t_event_transitions",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle="""
     WITH ordered AS (
         SELECT user_id, event_type, ts,
@@ -1354,7 +1346,6 @@ def t_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shape); the denylist is an anti-join on a tiny aggregate.
 @query(
     "q16_supplier_breadth",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle="""
     WITH bad AS (
         SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
@@ -1389,7 +1380,6 @@ def q16_supplier_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the monitoring shape behind every "traffic dropped at 3am" alert.
 @query(
     "t_events_rate_anomalies",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle="""
     WITH hourly AS (
         SELECT event_type,
@@ -1452,7 +1442,6 @@ def t_events_rate_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the per-group variant, this is the global one).
 @query(
     "q15_top_supplier",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=f"""
     WITH revenue AS (
         SELECT l_suppkey AS supplier_no,
@@ -1503,7 +1492,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # result is the 2x2 pair matrix by ship year.
 @query(
     "q7_volume_shipping",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=f"""
     SELECT sn.n_name AS supp_nation,
            cn.n_name AS cust_nation,
@@ -1563,7 +1551,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # revenue minus cost, grouped by supplier nation x order year) is Q9's.
 @query(
     "q9_product_profit",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=f"""
     SELECT n.n_name AS nation,
            CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
@@ -1616,7 +1603,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (including zero) — LEFT join + two-level aggregation.
 @query(
     "q13_order_count_distribution",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle="""
     SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
     FROM (
@@ -1657,7 +1643,6 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # supplier participated, and NO other supplier failed.
 @query(
     "q21_waiting_suppliers",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle="""
     WITH per AS (
         SELECT l.l_orderkey, l.l_suppkey,
@@ -1722,7 +1707,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # schema has no phone country code; nation plays its role.
 @query(
     "q22_dormant_customers",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=f"""
     WITH thresh AS (
         SELECT CAST(SUM({scaled_sql("c_acctbal")}) AS DOUBLE) / 100.0
@@ -1791,7 +1775,6 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # market, one nation's suppliers in the numerator).
 @query(
     "q8_market_share",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=f"""
     SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
            CAST(100.0 * SUM(CASE WHEN sn.n_name = 'NATION_1'
@@ -1860,7 +1843,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scalar-subquery shape is Q11's.
 @query(
     "q11_important_suppliers",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=f"""
     WITH val AS (
         SELECT l_suppkey,
@@ -1919,7 +1901,6 @@ def q11_important_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY
     GROUP BY 1
     """,
-    driver=False,  # r7-born; rotates into the r8 driver export
 )
 def q12_priority_by_shipmode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late 1996 shipments split into urgent/non-urgent line counts per
@@ -1953,7 +1934,6 @@ def q12_priority_by_shipmode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (SURVEY §2.5) alongside row_number/rank/lag.
 @query(
     "w_ntile_customer_value_quartiles",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=f"""
     WITH t AS (
         SELECT o_custkey,
@@ -1999,7 +1979,6 @@ def w_ntile_customer_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFr
 # actually use. DataFrame.groupingSets landed in Spark 4.0.
 @query(
     "a_grouping_sets_status_priority",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=f"""
     SELECT o_orderstatus AS status,
            o_orderpriority AS priority,
@@ -2044,7 +2023,6 @@ def a_grouping_sets_status_priority(spark: SparkSession, sf_dir: str) -> DataFra
 # doubles (rank arithmetic), so no rounding discipline is needed.
 @query(
     "w_percentile_standing_orders",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=f"""
     WITH t AS (
         SELECT o_custkey, o_orderpriority AS priority,

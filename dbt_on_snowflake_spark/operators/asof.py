@@ -185,7 +185,6 @@ def asof_last_order_before_event(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "asof_next_order_after_event",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle="""
     WITH ranked AS (
         SELECT e.event_id,
@@ -249,7 +248,6 @@ ASOF_TOLERANCE_DAYS = 30
 
 @query(
     "asof_last_order_within_30d",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=f"""
     WITH ranked AS (
         SELECT e.event_id,

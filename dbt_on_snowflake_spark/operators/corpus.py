@@ -149,7 +149,6 @@ _RATE_CASE_SQL = (
 
 @query(
     "corpus_sample_stratified",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH b AS (
         SELECT doc_id, source, lang,
@@ -204,7 +203,6 @@ CONTAMINATION_MIN_SHARED = 1
 
 @query(
     "text_contamination",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH {SHINGLES_CTE},
     bench AS (
@@ -933,7 +931,6 @@ def corpus_mixture_sample_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_pack_sequences_bpe",
-    driver=False,  # exact twin of the driver-checked pack shape
     oracle=f"""
     WITH t AS (
         SELECT doc_id, lang, {_BPE_N_TOKENS_SQL} AS n_tokens
@@ -970,7 +967,6 @@ CHUNK_STRIDE = 48  # overlap = CHUNK_W - CHUNK_STRIDE = 16 tokens
 
 @query(
     "corpus_chunk_documents",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=f"""
     WITH tok AS (
         SELECT doc_id, string_split(text, ' ') AS ts,
@@ -1064,7 +1060,6 @@ _EPOCH_PPM_SQL = (
 
 @query(
     "corpus_mixture_epochs",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=f"""
     WITH d AS (
         SELECT doc_id, source, ({_EPOCH_PPM_SQL}) AS ppm,
@@ -1143,7 +1138,6 @@ VAL_PCT = 10  # deterministic 10% validation split
 
 @query(
     "corpus_train_val_split",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=f"""
     WITH {SHINGLES_CTE},
     split AS (
@@ -1230,7 +1224,6 @@ def corpus_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_dedup_cascade",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     # oracle assigned after definition: it composes dedup's CTE
     # fragments, which import corpus.py's dependency (textops) — the
     # late assignment breaks the would-be import cycle
@@ -1353,7 +1346,6 @@ QUERIES["corpus_dedup_cascade"].oracle = _cascade_oracle()
 
 @query(
     "corpus_pack_shards_bpe",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=f"""
     WITH t AS (
         SELECT doc_id, lang, {_BPE_N_TOKENS_SQL} AS n_tokens
@@ -1398,7 +1390,6 @@ SHUFFLE_N_SHARDS = 32
 
 @query(
     "corpus_shuffle_order",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=f"""
     WITH h AS (
         SELECT doc_id,
@@ -1448,7 +1439,6 @@ def corpus_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_quality_report",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=None,  # set below (late import of the classifier SQL)
 )
 def corpus_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1507,7 +1497,6 @@ _set_quality_report_oracle()
 
 @query(
     "corpus_pack_efficiency",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=f"""
     WITH t AS (
         SELECT lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -1562,7 +1551,6 @@ TEMP_BUDGET_PCT = 50  # temperature-sampled corpus budget: 50% of tokens
 
 @query(
     "corpus_temperature_sample",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=f"""
     WITH c AS (
         SELECT lang,

@@ -132,7 +132,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ngram_jaccard",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH {SHINGLES_CTE},
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -468,7 +467,6 @@ SIMHASH_MAX_HAMMING = 3
 
 @query(
     "dedup_simhash_pairs",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH {_SIMHASH_FP_CTE},
     bands AS (
@@ -587,7 +585,6 @@ COSINE_SQL = (
 
 @query(
     "dedup_embedding_cosine",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -856,7 +853,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_cluster_sizes",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=f"""
     WITH RECURSIVE {SHINGLES_CTE},
     {_MINHASH_BANDS_CTE},
@@ -1282,7 +1278,6 @@ def dedup_incremental_candidates(
 
 @query(
     "dedup_minhash_deleted",
-    driver=False,  # r12-born: R13_ROTATE_IN
     # the oracle is the batch verified-pairs pipeline over the corpus
     # WITHOUT the deleted docs, expressed by shadowing the documents
     # view with a filtered CTE (main.documents = the registered view;
@@ -1714,7 +1709,6 @@ PASSAGE_W = 16  # tokens per passage window
 
 @query(
     "dedup_passages",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=f"""
     WITH tok AS (
         SELECT doc_id, string_split(text, ' ') AS ts FROM documents

@@ -38,7 +38,6 @@ def _with_payload(d: DataFrame) -> DataFrame:
 
 @query(
     "multimodal_meta",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle="""
     SELECT doc_id,
            source AS media_source,
@@ -225,7 +224,6 @@ PATCH = 16  # ViT-style square patch side
 
 @query(
     "multimodal_patch_grid",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=f"""
     WITH p AS (
         SELECT doc_id,
@@ -321,7 +319,6 @@ _MM_EMBED_SQL = (
 
 @query(
     "multimodal_embed_topk",
-    driver=False,  # r8-born; rotates into the r9 driver export
     oracle=f"""
     WITH q AS (
         SELECT doc_id, {_MM_EMBED_SQL} AS qv
@@ -433,7 +430,6 @@ def _mm_indexed_oracle() -> str:
 
 @query(
     "multimodal_embed_topk_indexed",
-    driver=False,  # r11-born: R12_ROTATE_IN
     oracle=None,  # set below (composed from the verified CTE fragments)
 )
 def multimodal_embed_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -528,7 +524,6 @@ def _mm_deleted_oracle() -> str:
 
 @query(
     "multimodal_embed_topk_deleted",
-    driver=False,  # r13-born: R14_ROTATE_IN
     oracle=None,  # set below (composed from the verified CTE fragments)
 )
 def multimodal_embed_topk_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,7 +34,6 @@ from dbt_on_snowflake_spark.testdata import table
 @query(
     "s4_source_passthrough",
     oracle="SELECT * FROM region",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
 )
 def s4_source_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table(spark, sf_dir, "region")
@@ -43,7 +42,6 @@ def s4_source_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- P2: column projection + rename (orders.sql:1-34 aliases) ---
 @query(
     "p2_projection_rename",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle="""
     SELECT c_custkey AS customer_id,
            c_name AS customer_name,
@@ -64,7 +62,6 @@ def p2_projection_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- P6: range predicate (dbt_utils.accepted_range, __sources.yml:217-220) ---
 @query(
     "p6_range_filter",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle="""
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders
@@ -84,7 +81,6 @@ def p6_range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # __sources.yml:204-205; frozen clock for determinism, SURVEY §7.4) ---
 @query(
     "p7_ts_filter",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle="""
     SELECT event_id, user_id, event_type
     FROM events
@@ -126,7 +122,6 @@ _DQ_CHECKS = [
 
 @query(
     "dq_failing_rows",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle="\nUNION ALL\n".join(
         f"SELECT '{name}' AS check_name, COUNT(*) AS failures"
         f" FROM {tbl} WHERE {cond}"
@@ -247,7 +242,6 @@ def j2_left_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # __sources.yml:138-140 etc.) — here inverted: customers with no orders.
 @query(
     "j7_anti_orphans",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle="""
     SELECT c_custkey, c_name
     FROM customer c
@@ -265,7 +259,6 @@ def j7_anti_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Semi join (EXISTS) — complements J7.
 @query(
     "j_semi_active_customers",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle="""
     SELECT c_custkey, c_name, c_mktsegment
     FROM customer c
@@ -351,7 +344,6 @@ def a1_loyalty_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-expressed natively in PySpark DataFrame API.
 @query(
     "a4_sales_by_nation",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     SELECT n.n_nationkey AS nation_id,
            CONCAT(n.n_name, ' (', r.r_name, ')') AS nation_display,
@@ -429,7 +421,6 @@ def a4_sales_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # __sources.yml:66-72) on a deliberately non-unique column so rows flow.
 @query(
     "a6_unique_violations",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle="""
     SELECT p_brand AS brand, COUNT(*) AS n
     FROM part
@@ -451,7 +442,6 @@ def a6_unique_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # setup_data.sql:57; never queried there — we demonstrate the query path).
 @query(
     "f_json_extract",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle="""
     SELECT event_id,
            CAST(json_extract(props, '$.k') AS BIGINT) AS k_value,
@@ -473,7 +463,6 @@ def f_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- F2-F5: scalar function suite (concat/cast/coalesce/case/date parts) ---
 @query(
     "f_scalar_suite",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle="""
     SELECT event_id,
            CONCAT(UPPER(event_type), '-', CAST(user_id AS VARCHAR)) AS tag,
@@ -511,7 +500,6 @@ def f_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engine-portable equivalents on one distinct-date frame.
 @query(
     "f_datetime_suite",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle="""
     SELECT DISTINCT
            CAST(o_orderdate AS DATE) AS d,
@@ -565,7 +553,6 @@ def f_datetime_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # surfaced as presence classes.
 @query(
     "j_full_outer_daily_reconciliation",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle="""
     WITH o AS (
         SELECT CAST(o_orderdate AS DATE) AS day, COUNT(*) AS n_orders

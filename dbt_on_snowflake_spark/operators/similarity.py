@@ -269,7 +269,6 @@ N_PROBE = 2  # multiprobe: the 2 nearest centroids per query
 
 @query(
     "ann_ivf_multiprobe",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=None,  # set post-hoc: _set_trained_ivf_oracles()
 )
 def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,7 +292,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cell-keyed corpus."""
     e = _vectors(spark, sf_dir)
     _, cvec, corpus = _trained_cells_and_corpus(spark, e)
-    q = F.broadcast(e.filter(F.expr(_QUERY_PRED))).alias("q")
+    q = e.filter(F.expr(_QUERY_PRED)).alias("q")
     return _multiprobe_topk(q, cvec, corpus)
 
 
@@ -329,8 +328,9 @@ def _multiprobe_topk(
     wq = Window.partitionBy("query_id").orderBy(
         F.col("ccos").desc(), F.col("label").asc()
     )
+    # hint q at its one join: the scorer below collects q, not joins it
     probes = (
-        q.crossJoin(F.broadcast(cvec))
+        F.broadcast(q).crossJoin(F.broadcast(cvec))
         .select(
             F.col("q.vec_id").alias("query_id"),
             F.col("c.label").alias("label"),
@@ -349,20 +349,19 @@ def _multiprobe_topk(
 
 @query(
     "ann_ivf_topk",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=None,  # set post-hoc: _set_trained_ivf_oracles()
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN, single probe: the strict nprobe=1 special case of
     ``ann_ivf_multiprobe`` (same trained cells, same probe ranking —
-    the retirement contract in the registry ledger). Each query scans
+    its ``RETIRED_FROM_ROTATION`` guard in the registry). Each query scans
     only its nearest trained cell's inverted list: recall < 1 by
     design; cost drops from O(N) to O(N / n_clusters) per query. At
     scale the cell-keyed corpus is partitioned by cell, so the single
     probe is a single-partition scan."""
     e = _vectors(spark, sf_dir)
     _, cvec, corpus = _trained_cells_and_corpus(spark, e)
-    q = F.broadcast(e.filter(F.expr(_QUERY_PRED))).alias("q")
+    q = e.filter(F.expr(_QUERY_PRED)).alias("q")
     return _multiprobe_topk(q, cvec, corpus, nprobe=1)
 
 
@@ -585,7 +584,7 @@ def ann_ivf_multiprobe_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         job_group="ann_ivf_multiprobe_indexed",
         gc_suffix=suffix,
     )
-    q = F.broadcast(e.filter(F.expr(_QUERY_PRED))).alias("q")
+    q = e.filter(F.expr(_QUERY_PRED)).alias("q")
     cvec = spark.table(centroids_table)
     corpus = _live_assignments(spark, assignments_table).select(
         "vec_id", "label", "v"
@@ -757,7 +756,6 @@ def refresh_centroids(spark: SparkSession, *, centroids_table: str,
 
 @query(
     "ann_incremental_assign",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=None,  # set post-hoc: _set_trained_ivf_oracles() — the cc
     # Lloyd chain trained on the corpus slice (frozen cells) + the casg
     # nearest-cell assignment over the held-out batch
@@ -963,7 +961,6 @@ def _semantic_prune(
 
 @query(
     "dedup_semantic_served",
-    driver=False,  # shares dedup_semantic's oracle; parity-verified
     headline=True,  # r8: the serve-path bench twin — dedup_semantic's
     # headline number conflates index build with dedup; this one reuses
     # the persisted index so serve-path regressions aren't masked
@@ -1026,7 +1023,6 @@ def _semantic_deleted_oracle() -> str:
 
 @query(
     "dedup_semantic_deleted",
-    driver=False,  # r13-born: R14_ROTATE_IN
     oracle=_semantic_deleted_oracle(),
 )
 def dedup_semantic_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1149,7 +1145,6 @@ def _semantic_greedy_prune(e: DataFrame, cvec: DataFrame) -> DataFrame:
 
 @query(
     "dedup_semantic_greedy",
-    driver=False,  # r8-born: rotates into the r9 driver export
     oracle=f"""
     WITH RECURSIVE e AS (
         SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
@@ -1221,7 +1216,6 @@ QUANT_LEVELS = 127  # symmetric int8 range
 
 @query(
     "ann_quantize_int8",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     s AS (
@@ -1302,7 +1296,6 @@ def ann_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_recall_eval",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=None,  # set post-hoc: _set_trained_ivf_oracles() — the IVF
     # leg now rides the trained-cell multiprobe (r17), so the oracle
     # composes the cc Lloyd chain + casg into the recall comparison
@@ -2235,7 +2228,6 @@ def _pq_rerank_oracle(
 
 @query(
     "ann_pq_codes",
-    driver=False,  # r7-born; in the r8 driver export (R8_EXPORT)
     headline=True,  # the encode stage on its own
     oracle=f"""
     WITH {_PQ_CODES_CTE}
@@ -2266,7 +2258,6 @@ def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_pq_adc_topk",
-    driver=False,  # r7-born; rotates into the r8 driver export
     headline=True,  # r7: newest heavy shape (2x codebook build + ADC scan)
     oracle=_pq_adc_topk_oracle(_PQ_CODES_CTE, TOP_K),
 )
@@ -2530,7 +2521,6 @@ def _widened_probes(
 
 @query(
     "ann_filtered_indexed",
-    driver=False,  # r10-born: R11_ROTATE_IN
     oracle=None,  # set post-hoc: _set_trained_ivf_oracles()
 )
 def ann_filtered_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2689,7 +2679,6 @@ def _exact_rerank(
 
 @query(
     "ann_pq_rerank_indexed",
-    driver=False,  # shares ann_pq_rerank_topk's oracle (set below)
     oracle=None,
 )
 def ann_pq_rerank_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2955,7 +2944,6 @@ def _rrf_fuse(b: DataFrame, d: DataFrame) -> DataFrame:
 
 @query(
     "retrieval_hybrid_rrf_indexed",
-    driver=False,  # r10-born: R11_ROTATE_IN; shares the recompute oracle
     oracle=None,  # set below
     headline=True,  # benched: serve-vs-scan twin of retrieval_hybrid_rrf
 )
@@ -3129,7 +3117,6 @@ def _perquery_hybrid_oracle() -> str:
 
 @query(
     "retrieval_hybrid_rrf_perquery",
-    driver=False,  # r10-born: R11_ROTATE_IN
     oracle=None,  # set below (needs textops constants at import time)
 )
 def retrieval_hybrid_rrf_perquery(
@@ -3303,7 +3290,6 @@ def _perquery_fuse(b: DataFrame, d: DataFrame) -> DataFrame:
 
 @query(
     "retrieval_hybrid_rrf_perquery_indexed",
-    driver=False,  # r10-born: R11_ROTATE_IN; shares the recompute oracle
     oracle=None,  # set below with the recompute twin's
 )
 def retrieval_hybrid_rrf_perquery_indexed(
@@ -3572,7 +3558,6 @@ HARD_NEG_POS_BAND = 0.95  # cosine >= this is a near-duplicate, not a negative
 
 @query(
     "ann_hard_negatives",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=f"""
     WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
     q AS (SELECT * FROM e WHERE {_QUERY_PRED}),
@@ -3611,7 +3596,6 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_pq_recall_eval",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=f"""
     WITH {_PQ_CODES_CTE},
     q AS (SELECT * FROM e WHERE {_QUERY_PRED}),
@@ -3749,9 +3733,6 @@ def _ivfpq_oracle(codes_cte: str, coarse_where: str = "") -> str:
 
 @query(
     "ann_ivfpq_topk",
-    driver=False,  # r16 EVIDENCE RESET: exported via R16_EXPORT (the
-    # coarse quantizer is Lloyd-trained this round — prior driver
-    # greens evidence the retired label-cell semantics)
     oracle=_ivfpq_oracle(_PQ_CODES_CTE),
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3973,7 +3954,6 @@ def _ivfpq_serve(
 
 @query(
     "ann_ivfpq_indexed",
-    driver=False,  # r15-born: R16_ROTATE_IN (first driver row due r16)
     oracle=None,  # set below: shares ann_ivfpq_topk's oracle verbatim
     headline=True,  # r16 (VERDICT r15 Next #6): the partition-pruned
     # serve is the flagship 100 TB ANN path — tracked round-over-round
@@ -4830,7 +4810,6 @@ def _live_assignments(spark: SparkSession, assignments_table: str) -> DataFrame:
 
 @query(
     "ann_pq_adc_deleted",
-    driver=False,  # r12-born: R13_ROTATE_IN
     oracle=_pq_adc_topk_oracle(
         _PQ_CODES_CTE,
         TOP_K,
@@ -4877,7 +4856,6 @@ def ann_pq_adc_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_ivf_multiprobe_deleted",
-    driver=False,  # r12-born: R13_ROTATE_IN
     oracle=None,  # set post-hoc: _set_trained_ivf_oracles()
 )
 def ann_ivf_multiprobe_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4904,7 +4882,7 @@ def ann_ivf_multiprobe_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.expr(_NEW_BATCH_PRED)).select("vec_id"),
         assignments_table=asg,
     )
-    q = F.broadcast(e.filter(F.expr(_QUERY_PRED))).alias("q")
+    q = e.filter(F.expr(_QUERY_PRED)).alias("q")
     cvec = spark.table(cb)
     corpus = _live_assignments(spark, asg).select("vec_id", "label", "v")
     return _multiprobe_topk(q, cvec, corpus)
@@ -4912,7 +4890,6 @@ def ann_ivf_multiprobe_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_pq_adc_appended",
-    driver=False,  # r11-born: R12_ROTATE_IN
     oracle=_pq_adc_topk_oracle(_PQ_CODES_CTE_FROZEN, TOP_K),
 )
 def ann_pq_adc_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5026,7 +5003,6 @@ def ensure_appended_pq_index(
 
 @query(
     "ann_pq_adc_appended_served",
-    driver=False,  # r12-born: R13_ROTATE_IN; shares the frozen oracle
     oracle=_pq_adc_topk_oracle(_PQ_CODES_CTE_FROZEN, TOP_K),
     headline=True,  # benched: the steady-state serve over grown codes
 )
@@ -5135,7 +5111,6 @@ def ensure_appended_ivfpq_index(
 
 @query(
     "ann_ivfpq_appended_served",
-    driver=False,  # r16-born: R17_ROTATE_IN (first driver row due r17)
     oracle=_ivfpq_oracle(
         _PQ_CODES_CTE_FROZEN, f" WHERE {_CORPUS_PRED}"
     ),
@@ -5158,7 +5133,6 @@ def ann_ivfpq_appended_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_pq_adc_indexed",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=None,  # set below: shares ann_pq_adc_topk's oracle verbatim
 )
 def ann_pq_adc_indexed(
@@ -5209,7 +5183,6 @@ def _adc_serve(
 
 @query(
     "ann_filtered_rerank_indexed",
-    driver=False,  # r10-born: R11_ROTATE_IN
     oracle=None,  # set below (built from the rerank CTEs + the filter)
     headline=True,  # benched: the filtered two-stage serve flagship
 )

@@ -46,7 +46,6 @@ def salted_join(
 
 @query(
     "j_salted_events_enrich",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle="""
     SELECT e.event_id,
            e.user_id,

@@ -61,7 +61,6 @@ _SW_LIST_SQL = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
 
 @query(
     "text_quality",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH t AS (
         SELECT doc_id, string_split(text, ' ') AS toks, text FROM documents
@@ -126,7 +125,6 @@ def _marker_count_sql(words: tuple[str, ...]) -> str:
 
 @query(
     "text_lang_id",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks
                FROM documents),
@@ -185,7 +183,6 @@ _BPE_REGEX = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 @query(
     "text_token_count",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     SELECT source,
            COUNT(*) AS n_docs,
@@ -343,7 +340,6 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_levenshtein_pairs",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle="""
     WITH p AS (SELECT doc_id, substring(text, 1, 64) AS prefix
                FROM documents WHERE doc_id < 350)
@@ -384,7 +380,6 @@ FP_K = 4  # k smallest shingle hashes form the fingerprint
 
 @query(
     "text_fingerprint",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH tok AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
     sh AS (
@@ -429,7 +424,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_repetition",
-    driver=False,  # r6 rotation: r5 driver-green veteran, parity-checked locally
     oracle="""
     WITH t AS (
         SELECT doc_id, string_split(text, ' ') AS ts FROM documents
@@ -665,7 +659,6 @@ TOP_NGRAMS_K = 20
 
 @query(
     "text_top_ngrams",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=f"""
     WITH tok AS (
         SELECT doc_id, string_split(text, ' ') AS ts FROM documents
@@ -724,7 +717,6 @@ COVERAGE_TOP_V = 100  # corpus bigram vocabulary for the coverage score
 
 @query(
     "text_bigram_coverage",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle=f"""
     WITH tok AS (
         SELECT doc_id, string_split(text, ' ') AS ts FROM documents
@@ -825,7 +817,6 @@ def quality_score_sql(text_expr: str = "text") -> str:
 
 @query(
     "text_quality_classifier",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=f"""
     SELECT doc_id,
            CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens,
@@ -1070,7 +1061,6 @@ def _bpe_train_oracle(n_merges: int) -> str:
 
 @query(
     "text_bpe_train_merges",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=_bpe_train_oracle(BPE_TRAIN_MERGES),
 )
 def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1138,7 +1128,6 @@ def _bpe_trained_count_oracle() -> str:
 
 @query(
     "text_token_count_bpe_trained",
-    driver=False,  # r7-born; rotates into the r8 driver export
     oracle=_bpe_trained_count_oracle(),
 )
 def text_token_count_bpe_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1683,7 +1672,6 @@ def bm25_topn_indexed(
 
 @query(
     "text_bm25_topk_indexed",
-    driver=False,  # r10-born: R11_ROTATE_IN; shares the recompute oracle
     oracle=None,  # set below
     headline=True,  # benched: the serve-vs-scan gap is the index's value
 )
@@ -1936,7 +1924,6 @@ def text_index_append(
 
 @query(
     "text_bm25_topk_incremental",
-    driver=False,  # r10-born: R11_ROTATE_IN; shares the recompute oracle
     oracle=None,  # set below
 )
 def text_bm25_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2050,7 +2037,6 @@ def text_index_delete(
 
 @query(
     "text_bm25_topk_updated",
-    driver=False,  # r12-born: R13_ROTATE_IN
     oracle=f"""
     WITH {bm25_ranked_cte(
         BM25_TOP_N,
@@ -2113,7 +2099,6 @@ def text_bm25_topk_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_bm25_topk_deleted",
-    driver=False,  # r12-born: R13_ROTATE_IN
     oracle=f"""
     WITH {bm25_ranked_cte(
         BM25_TOP_N,
@@ -2251,7 +2236,6 @@ def ensure_deleted_text_index(
 
 @query(
     "text_bm25_topk_deleted_served",
-    driver=False,  # r14-born: R15_ROTATE_IN
     oracle=f"""
     WITH {bm25_ranked_cte(
         BM25_TOP_N,

@@ -77,7 +77,6 @@ def run_to_table(sdf: DataFrame, spark: SparkSession, mode: str = "complete") ->
 
 @query(
     "t_events_hourly_streaming",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start,
            event_type,
@@ -111,7 +110,6 @@ _SESSION_GAP = "30 minutes 1 microsecond"
 
 @query(
     "t_events_sessions_streaming",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH flagged AS (
         SELECT user_id, ts, value,
@@ -167,7 +165,6 @@ def t_events_sessions_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t_events_dedup_streaming",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle="""
     SELECT DISTINCT user_id,
            event_type,
@@ -197,7 +194,6 @@ def t_events_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t_events_dedup_wm_streaming",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle="""
     SELECT DISTINCT user_id,
            event_type,
@@ -237,7 +233,6 @@ def t_events_dedup_wm_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t_events_sliding_streaming",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     SELECT ws AS window_start,
            event_type,
@@ -274,7 +269,6 @@ _WM_DELAY = "2 hours"  # watermark delay for the append-mode twin
 
 @query(
     "t_events_hourly_append",
-    driver=False,  # r5 rotation: r3+r4 driver-green veteran, parity-checked locally
     oracle=f"""
     WITH mx AS (SELECT MAX(ts) AS max_ts FROM events)
     SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start,
@@ -583,7 +577,6 @@ def text_index_stream_ingest(
 
 @query(
     "text_index_ingest_streaming",
-    driver=False,  # r10-born: R11_ROTATE_IN; shares the recompute oracle
     oracle=None,  # set below
 )
 def text_index_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,7 +685,6 @@ def pq_index_stream_ingest(
 
 @query(
     "ann_pq_adc_ingest_streaming",
-    driver=False,  # r11-born: R12_ROTATE_IN; shares the appended oracle
     oracle=None,  # set below
 )
 def ann_pq_adc_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -870,7 +862,6 @@ def funnel_final_counts(spark: SparkSession, out_dir: str) -> DataFrame:
 
 @query(
     "t_event_funnel_streaming",
-    driver=False,  # born r6: parity-checked; rotate into the r7 export
     oracle=None,  # set below: shares the batch funnel's oracle
 )
 def t_event_funnel_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -909,7 +900,6 @@ _set_stream_funnel_oracle()
 
 @query(
     "t_events_stream_stream_join",
-    driver=False,  # born r7: parity-checked; rotate into the r8 export
     oracle="""
     SELECT v.user_id,
            v.ts AS view_ts,
@@ -1071,7 +1061,6 @@ def _ingest_oracle() -> str:
 @query(
     "corpus_ingest_streaming",
     oracle=None,  # set right below (late import avoids a module cycle)
-    driver=False,  # r7-born; rotates into the r8 driver export
 )
 def corpus_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION INGEST LOOP as one streaming pipeline: documents
@@ -1288,7 +1277,6 @@ def semantic_ingest_prune(
 @query(
     "ann_semantic_ingest_streaming",
     oracle=None,  # set right below (shares the greedy recursion shape)
-    driver=False,  # r8-born; rotates into the r9 driver export
 )
 def ann_semantic_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING SemDeDup — the ingest-time semantic gate: embedding
@@ -1402,7 +1390,6 @@ TRENDING_TOP_N = 3
 
 @query(
     "t_events_topn_types_streaming",
-    driver=False,  # r9-born: owed a first driver check in the r10 window
     oracle=f"""
     WITH counts AS (
         SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start,
@@ -1524,7 +1511,6 @@ def run_update_log(
 
 @query(
     "t_events_topn_types_update_streaming",
-    driver=False,  # r10-born: R11_ROTATE_IN; shares the complete twin's oracle
     oracle=None,  # set below
 )
 def t_events_topn_types_update_streaming(

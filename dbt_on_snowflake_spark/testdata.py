@@ -24,9 +24,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 # Inferred-SCHEMA cache: path -> (file stats, schema-affecting confs,
 # StructType). Schema inference is metadata, not data — but every bare
 # ``spark.read.parquet`` construction runs a real 1-task footer-read job

@@ -1,17 +1,14 @@
 """Every registered query with an oracle must hash-match DuckDB — this is a
-local replica of the driver's t2 correctness gate (sf0.001 for speed; the
+local replica of the driver's correctness gate (sf0.001 for speed; the
 driver runs sf0.01).
 
-SHARDING (r18, VERDICT r17 Next #1 — the full suite outran the driver's
-verify window, reporting tests_ok=false on a suite with zero failures):
-by default the replica runs a BOUNDED parametrization — every
-driver-EXPORTED query (the exact mirror of this round's gate) plus a
-rotating sample of the rest, seeded by ``registry.ACTIVE_EXPORT_ROUND``
+By default the replica runs a bounded parametrization: every query the
+driver exports this round (``registry.driver_queries``, derived from the
+committed CORRECTNESS history), the ``ALWAYS_RUN`` vector rows, and a
+sample of the rest seeded by the export round ``N = max(history) + 1``,
 so successive rounds verify different extra slices. Set
-``SPARK_GRAFT_FULL_PARITY=1`` for the full 175-query replica (the
-builder runs that before shipping a round; this round's full-registry
-run is logged in OPTIMIZATION_r18.md). The non-parametrized harness
-tests below always run."""
+``SPARK_GRAFT_FULL_PARITY=1`` for the full 175-query replica. The
+non-parametrized harness tests below always run."""
 
 from __future__ import annotations
 
@@ -20,7 +17,12 @@ import os
 
 import pytest
 
-from dbt_on_snowflake_spark.registry import ACTIVE_EXPORT_ROUND, all_queries
+from dbt_on_snowflake_spark.registry import (
+    all_queries,
+    correctness_history,
+    driver_export,
+    driver_queries,
+)
 from tests.conftest import SF_SMOKE
 from tests.oracle_harness import compare
 
@@ -58,13 +60,13 @@ ALWAYS_RUN = {
 def _parity_names() -> list[str]:
     if FULL_PARITY:
         return sorted(_QUERIES)
-    exported = {n for n, q in _QUERIES.items() if q.driver}
+    history = correctness_history()
+    exported = driver_export(history, _QUERIES)
     rest = sorted(set(_QUERIES) - exported)
+    export_round = max(history, default=0) + 1
     ranked = sorted(
         rest,
-        key=lambda n: hashlib.md5(
-            f"r{ACTIVE_EXPORT_ROUND}:{n}".encode()
-        ).hexdigest(),
+        key=lambda n: hashlib.md5(f"r{export_round}:{n}".encode()).hexdigest(),
     )
     return sorted(exported | ALWAYS_RUN | set(ranked[:PARITY_SAMPLE]))
 
@@ -209,67 +211,18 @@ def test_pack_oracles_arrow_schema_all_int64():
 
 def test_driver_export_within_budget():
     """The driver checks only the first DRIVER_BUDGET exported queries per
-    round; exporting more silently drops CORRECTNESS rows (round-2 verdict
-    "What's wrong" #4). Demoted (driver=False) queries are still covered by
-    test_oracle_parity above."""
-    from dbt_on_snowflake_spark.registry import DRIVER_BUDGET, driver_queries
+    round; exporting more silently drops CORRECTNESS rows. Queries not
+    exported this round are still covered by test_oracle_parity above."""
+    from dbt_on_snowflake_spark.registry import DRIVER_BUDGET
 
     exported = driver_queries()
     assert len(exported) <= DRIVER_BUDGET
-    # every query family that has driver=False members keeps >= 1 exported row
+    # every query family keeps >= 1 exported row
     families = {
         "dedup_", "text_", "ann_", "q", "w_", "a_", "t_events_", "multimodal_"
     }
     for fam in families:
         assert any(n.startswith(fam) for n in exported), fam
-
-
-def test_r18_rotation_promises_kept():
-    """The r18 rotation: the R18 draft re-verified against
-    CORRECTNESS_r17 (50/50 green, key set == R17_EXPORT exactly) — the
-    46 window-hard r15-green rows plus the 4 bm25 evidence re-greens
-    for the persisted per-term df change (registry ledger, r18 entry)
-    = 50, zero slips, no rotate-ins (r17 birthed no queries). Pin them
-    so a later edit can't silently demote one before the driver sees
-    it. (The full staleness arithmetic is machine-checked against the
-    CORRECTNESS_r*.json history in tests/test_rotation_ledger.py.)"""
-    from dbt_on_snowflake_spark.registry import (
-        R15_EXPORT,
-        R16_EXPORT,
-        R17_EXPORT,
-        R18_EXPORT,
-        R18_ROTATE_IN,
-        R19_ROTATE_IN,
-        RETIRED_FROM_ROTATION,
-        driver_queries,
-    )
-
-    exported = set(driver_queries())
-    assert R18_EXPORT == exported, sorted(R18_EXPORT ^ exported)
-    # the 46 window-hard rows: last green r15 = exported at r15, not
-    # re-exported (hence not re-greened) at r16 or r17, not retired
-    retired = set(RETIRED_FROM_ROTATION)
-    r15_green = (R15_EXPORT - retired) - R16_EXPORT - R17_EXPORT
-    assert len(r15_green) == 46, len(r15_green)
-    regreens = {
-        "text_bm25_topk_indexed",
-        "text_bm25_topk_incremental",
-        "text_bm25_topk_updated",
-        "text_index_ingest_streaming",
-    }
-    assert r15_green <= exported, sorted(r15_green - exported)
-    assert R18_ROTATE_IN <= exported, sorted(R18_ROTATE_IN - exported)
-    assert regreens <= exported
-    # the export is exactly the mandatory set + the documented extras
-    assert exported == r15_green | R18_ROTATE_IN | regreens
-    # retirement is disjoint from the export
-    assert not retired & exported
-    # r18-born queries (none) register in the ledger for r19
-    from dbt_on_snowflake_spark.registry import all_queries
-
-    assert R19_ROTATE_IN <= set(all_queries()), sorted(
-        R19_ROTATE_IN - set(all_queries())
-    )
 
 
 def test_empty_input_parity_sweep(spark, tmp_path):

@@ -90,6 +90,36 @@ def test_ann_broadcast_query_side(spark):
 
 
 @pytest.mark.parametrize(
+    "name",
+    [
+        "ann_ivf_topk",
+        "ann_ivf_multiprobe",
+        "ann_ivf_multiprobe_indexed",
+        "ann_ivf_multiprobe_deleted",
+    ],
+)
+def test_ivf_scorer_query_side_has_no_hint(spark, monkeypatch, name):
+    """The IVF serves hint their query side only at the probe join. The
+    frame the Arrow scorer collects carries no hint: a broadcast hint on
+    a frame that is collected, not joined, is dead and Spark logs a
+    HintErrorLogger warning for it."""
+    from dbt_on_snowflake_spark.operators import similarity
+
+    scorer = similarity._bruteforce_score_arrow
+    collected = []
+
+    def spy(corpus, queries, *args, **kwargs):
+        collected.append(queries._jdf.queryExecution().logical().toString())
+        return scorer(corpus, queries, *args, **kwargs)
+
+    monkeypatch.setattr(similarity, "_bruteforce_score_arrow", spy)
+    Q[name].fn(spark, SF_SMOKE)
+    assert len(collected) == 1
+    for node in ("ResolvedHint", "UnresolvedHint"):
+        assert node not in collected[0], collected[0]
+
+
+@pytest.mark.parametrize(
     "name", ["q1_pricing_summary", "a1_loyalty_metrics", "dedup_minhash_lsh"]
 )
 def test_headlines_have_codegen(spark, name):
