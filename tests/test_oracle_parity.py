@@ -6,7 +6,9 @@ By default the replica runs a bounded parametrization: every query the
 driver exports this round (``registry.driver_queries``, derived from the
 committed CORRECTNESS history), the ``ALWAYS_RUN`` vector rows, and a
 sample of the rest seeded by the export round ``N = max(history) + 1``,
-so successive rounds verify different extra slices. Set
+so successive rounds verify different extra slices. Round N-1's slice
+(the rows of the newest CORRECTNESS file and its sample) stays in for
+one more round, so each slice is verified on two consecutive rounds. Set
 ``SPARK_GRAFT_FULL_PARITY=1`` for the full 175-query replica. The
 non-parametrized harness tests below always run."""
 
@@ -57,18 +59,29 @@ ALWAYS_RUN = {
 }
 
 
+def _round_slice(round_: int, exported: set[str]) -> set[str]:
+    """A round's export plus ``PARITY_SAMPLE`` of the rest, seeded by it."""
+    ranked = sorted(
+        set(_QUERIES) - exported,
+        key=lambda n: hashlib.md5(f"r{round_}:{n}".encode()).hexdigest(),
+    )
+    return exported | set(ranked[:PARITY_SAMPLE])
+
+
 def _parity_names() -> list[str]:
     if FULL_PARITY:
         return sorted(_QUERIES)
     history = correctness_history()
-    exported = driver_export(history, _QUERIES)
-    rest = sorted(set(_QUERIES) - exported)
     export_round = max(history, default=0) + 1
-    ranked = sorted(
-        rest,
-        key=lambda n: hashlib.md5(f"r{export_round}:{n}".encode()).hexdigest(),
+    names = ALWAYS_RUN | _round_slice(
+        export_round, driver_export(history, _QUERIES)
     )
-    return sorted(exported | ALWAYS_RUN | set(ranked[:PARITY_SAMPLE]))
+    if history:
+        # the last round's slice stays one more round; its export is the
+        # key set of the newest CORRECTNESS file
+        last = export_round - 1
+        names |= _round_slice(last, set(history[last]) & set(_QUERIES))
+    return sorted(names)
 
 # Queries whose BroadcastNestedLoopJoin is a BOUNDED broadcast side by
 # construction (a 1-row collapsed vocabulary, a capped query-vector set,
